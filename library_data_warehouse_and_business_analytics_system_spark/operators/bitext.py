@@ -96,9 +96,10 @@ def margin_mine(a: DataFrame, b: DataFrame, id_col: str = "vec_id",
     exchange reuse usually dedups the shared window lineage, but at
     ANN-candidate scale a pinned 24-byte/pair frame is strictly
     cheaper than trusting the planner (measured 3.1× end-to-end on a
-    15M-candidate mine: 506 s → 165 s, scripts/probe_scale_round10b.py) — the cost is candidates × 24 bytes of
-    storage. Keep it False for gate-sized inputs (the default), where
-    determinism-under-reuse is the priority and the pin buys nothing.
+    15M-candidate mine: 506 s → 165 s, ROUND10.md) — the cost is
+    candidates × 24 bytes of storage. Keep it False for gate-sized
+    inputs (the default), where determinism-under-reuse is the
+    priority and the pin buys nothing.
 
     ``broadcast_sums`` controls the join strategy for the two
     neighborhood-sum frames (one row per distinct src/tgt id). Default

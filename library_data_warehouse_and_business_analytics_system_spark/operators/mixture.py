@@ -7,8 +7,8 @@ each source's budget is spent.
 
 Scale shape: the weight computation is one tiny per-source aggregate
 (two-phase) crossed with a broadcast scalar denominator; document
-selection uses the TWO-PHASE range-partition cumsum from
-``operators/packing.py`` (VERDICT r6) instead of a per-source window:
+selection uses the TWO-PHASE ordered scan from ``operators/scan.py``
+(VERDICT r6) instead of a per-source window:
 mixing jobs have FEW, HUGE sources by definition (that's why you
 temperature-sample), so ``Window.partitionBy(source)`` would put the
 dominant source's entire document set through one reducer. Here the
@@ -34,12 +34,11 @@ oracle.
 
 from __future__ import annotations
 
-from collections import defaultdict
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from .scan import running_total
 
 
 def temperature_mixture(docs: DataFrame, total_budget: int,
@@ -65,38 +64,16 @@ def temperature_mixture(docs: DataFrame, total_budget: int,
                                / F.col("d")).cast("bigint")
                        .alias("src_budget")))
 
-    # Two-phase per-source cumsum (packing.py:44-69's shape, applied
-    # within each source): range-shuffle on (source, order key), so
-    # a source's rows span MANY partitions in order — then offsets
-    # restore the per-source global running sum.
+    # Two-phase per-source running token total (operators/scan.py):
+    # range-shuffle on (source, order key), so a source's rows span
+    # MANY partitions in order — then offsets restore the per-source
+    # global running sum.
     order_key = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    base = toks.withColumn("_ok", order_key)
-    parts = n_partitions or base.sparkSession.sparkContext.defaultParallelism
-    # freeze the layout: the totals pass and the window pass must see
-    # the identical range partitioning (same contract as pack_sequences)
-    ranged = (base.repartitionByRange(parts, source_col, "_ok", id_col)
-              .withColumn("_pid", F.spark_partition_id())
-              .localCheckpoint())
-    totals = (ranged.groupBy("_pid", source_col)
-              .agg(F.sum("n_tokens").alias("s")).collect())
-    acc: dict = defaultdict(int)
-    offsets = []
-    for r in sorted(totals, key=lambda r: (r[source_col], r["_pid"])):
-        offsets.append((int(r["_pid"]), r[source_col],
-                        int(acc[r[source_col]])))
-        acc[r[source_col]] += r["s"]
-    off_df = ranged.sparkSession.createDataFrame(
-        offsets or [(0, None, 0)],
-        f"_pid int, {source_col} string, _off long")
-    joined = (ranged.join(F.broadcast(off_df), ["_pid", source_col], "left")
-              .withColumn("_off", F.coalesce("_off", F.lit(0))))
-    w = (Window.partitionBy("_pid", source_col)
-         .orderBy("_ok", id_col)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = (F.col("_off") + F.sum("n_tokens").over(w)).cast("bigint")
+    cum, _ = running_total(toks.withColumn("_ok", order_key), "_cum",
+                           ["_ok", id_col], [source_col],
+                           measure=F.col("n_tokens"), parts=n_partitions)
     return (
-        joined.join(F.broadcast(budgets), source_col)
-        .withColumn("_cum", cum)
+        cum.join(F.broadcast(budgets), source_col)
         .select(id_col, source_col, "n_tokens", "src_budget",
                 ((F.col("_cum") - F.col("n_tokens"))
                  < F.col("src_budget")).alias("kept"))

@@ -2,10 +2,9 @@
 computed WITHOUT a global single-partition window.
 
 The naive ``F.ntile(10).over(Window.orderBy(...))`` funnels the whole
-table through ONE reducer (Spark plans an Exchange SinglePartition) —
-the same scale-killer the packing/surrogate operators already solve
-with the two-phase range shape. This module reuses that shape for
-ranking:
+table through ONE reducer (Spark plans an Exchange SinglePartition).
+This module ranks with the two-phase ordered scan of
+``operators/scan.py`` instead:
 
 1. ``repartitionByRange`` on the order key (parallel range shuffle;
    partition i holds strictly smaller keys than partition i+1);
@@ -30,8 +29,10 @@ queries draw from (SURVEY.md §2 W-family).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .scan import running_total
 
 
 def with_global_rank(df: DataFrame, order_by: list[Column],
@@ -40,29 +41,8 @@ def with_global_rank(df: DataFrame, order_by: list[Column],
     """Adds a 1-based dense global rank under ``order_by`` (which must
     be a STRICT total order — include a unique tie-break column).
     Returns ``(frame, n_rows)``; the count is a free by-product of the
-    offsets pass. No global window: two-phase range shape."""
-    parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # freeze the layout: the counts pass and the rank pass must see
-    # the identical range partitioning (same localCheckpoint contract
-    # as pack_sequences / with_fact_surrogate_key)
-    ranged = (df.repartitionByRange(parts, *order_by)
-              .withColumn("_pid", F.spark_partition_id())
-              .localCheckpoint())
-    counts = {r["_pid"]: r["c"] for r in
-              ranged.groupBy("_pid").agg(F.count("*").alias("c")).collect()}
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((int(pid), acc))
-        acc += counts[pid]
-    off_df = ranged.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "_pid int, _off long")
-    w = Window.partitionBy("_pid").orderBy(*order_by)
-    out = (ranged.join(F.broadcast(off_df), "_pid", "left")
-           .withColumn(rank_col,
-                       (F.coalesce("_off", F.lit(0))
-                        + F.row_number().over(w)).cast("long"))
-           .drop("_pid", "_off"))
-    return out, acc
+    offsets pass. No global window: ``scan.running_total``."""
+    return running_total(df, rank_col, order_by, parts=n_partitions)
 
 
 def _ntile_expr(rank: Column, n_rows: int, n_tiles: int) -> Column:
@@ -110,47 +90,14 @@ def with_group_rank(df: DataFrame, group_cols: list[str],
     over many partitions, count per (partition, group), chain the
     per-group offsets on the driver (#partitions × #groups-straddling
     rows — tiny), and add a per-(partition, group) row_number to the
-    broadcast offset. ``order_by`` must be strict within a group
-    (include a unique tie-break)."""
-    parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    gcols = [F.col(c) for c in group_cols]
-    # The checkpoint materialization and the tiny per-(partition,
-    # group) count collect run under no_aqe (r14, guide §1.2): AQE
-    # turned each into 2-4 stage-materialization jobs, and it has
-    # nothing to re-plan here — the range partition count is pinned
-    # to ``parts`` by contract (the offsets below assume it), and the
-    # count reduce output is #partitions × #groups rows by
-    # construction. Values identical either way.
-    from ..session import no_aqe
-
-    with no_aqe(df.sparkSession):
-        ranged = (df.repartitionByRange(parts, *gcols, *order_by)
-                  .withColumn("_pid", F.spark_partition_id())
-                  .localCheckpoint())
-        counts = (ranged.groupBy("_pid", *group_cols)
-                  .agg(F.count("*").alias("c")).collect())
-    # per-group prefix offsets in pid order
-    by_group: dict[tuple, list] = {}
-    for r in counts:
-        by_group.setdefault(tuple(r[c] for c in group_cols), []).append(r)
-    rows = []
-    for key, blocks in by_group.items():
-        blocks.sort(key=lambda r: r["_pid"])
-        acc = 0
-        for b in blocks:
-            rows.append((int(b["_pid"]), *key, acc))
-            acc += b["c"]
-    schema = ", ".join(["_pid int"]
-                       + [f"`{c}` {dict(df.dtypes)[c]}" for c in group_cols]
-                       + ["_off long"])
-    off_df = ranged.sparkSession.createDataFrame(rows or [], schema) \
-        if rows else ranged.sparkSession.createDataFrame([], schema)
-    w = Window.partitionBy("_pid", *group_cols).orderBy(*order_by)
-    return (ranged.join(F.broadcast(off_df), ["_pid", *group_cols], "left")
-            .withColumn(rank_col,
-                        (F.coalesce("_off", F.lit(0))
-                         + F.row_number().over(w)).cast("long"))
-            .drop("_pid", "_off"))
+    broadcast offset (``scan.running_total``). ``order_by`` must be
+    strict within a group (include a unique tie-break); NULL group
+    keys rank as one group, as under ``PARTITION BY``."""
+    ranked, _ = running_total(df, rank_col, order_by, group_cols,
+                              parts=n_partitions)
+    # public column order: the group keys lead
+    return ranked.select(*group_cols, *[c for c in ranked.columns
+                                        if c not in group_cols])
 
 
 def group_quantile_disc(df: DataFrame, group_cols: list[str], val_col: str,

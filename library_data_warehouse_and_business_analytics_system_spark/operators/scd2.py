@@ -123,6 +123,7 @@ def scd2_apply(
     # collect, so the whole apply stays one lazy plan. The global
     # row_number window is acceptable because SCD2 batches are
     # dimension-sized (documented contract; facts use
+    # the two-phase scan of operators/scan.py, via
     # operators/surrogate.with_fact_surrogate_key).
     from pyspark.sql import Window
     mx_df = dim.agg(

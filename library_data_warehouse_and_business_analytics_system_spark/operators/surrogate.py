@@ -7,6 +7,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .scan import running_total
+
 SEQ_START = 100_001
 
 
@@ -39,7 +41,8 @@ def with_fact_surrogate_key(df: DataFrame, key_col: str,
                             start: int = SEQ_START) -> DataFrame:
     """Unique contiguous ids at FACT scale: partition-local row_number
     + driver-side cumulative partition offsets (the DataFrame form of
-    zipWithIndex). No global single-partition window — the only
+    zipWithIndex; the two-phase scan of ``operators/scan.py`` with no
+    order key). No global single-partition window — the only
     coordination is one count per partition.
 
     Ids are unique and contiguous but their assignment order follows
@@ -53,31 +56,10 @@ def with_fact_surrogate_key(df: DataFrame, key_col: str,
     should use ``monotonically_increasing_id`` instead: zero extra
     passes, at the cost of gaps and layout-dependent values.
     """
-    # Pin the partition layout before the two passes: counts and
-    # row_numbers must observe the IDENTICAL partitioning, but an
-    # uncached nondeterministic lineage (e.g. downstream of a shuffle)
-    # could recompute differently between the two jobs and collide or
-    # gap ids. localCheckpoint materializes eagerly and truncates the
-    # lineage, so both passes read the same frozen blocks.
-    pid_df = df.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
-    counts = {r["_pid"]: r["cnt"]
-              for r in pid_df.groupBy("_pid").agg(
-                  F.count(F.lit(1)).alias("cnt")).collect()}
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((int(pid), acc))
-        acc += counts[pid]
-    # Offsets join in as a broadcast tiny DataFrame on _pid rather
-    # than a coalesce(when...) chain — constant-cost hash probe per
-    # row even at 10k+ partitions (VERDICT r5).
-    off_df = pid_df.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "_pid int, _off long")
-    w = Window.partitionBy("_pid").orderBy(F.monotonically_increasing_id())
-    return (
-        pid_df.join(F.broadcast(off_df), "_pid", "left")
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn(key_col,
-                    (F.lit(start - 1) + F.coalesce("_off", F.lit(0))
-                     + F.col("_rn")).cast("long"))
-        .drop("_pid", "_rn", "_off")
-    )
+    # order=None keeps the input layout: the ids follow partition
+    # layout, and the frozen blocks guarantee the counts pass and the
+    # numbering pass see the identical partitioning even downstream of
+    # a nondeterministic shuffle (operators/scan.py).
+    keyed, _ = running_total(df, key_col, None)
+    return keyed.withColumn(key_col,
+                            (F.lit(start - 1) + F.col(key_col)).cast("long"))

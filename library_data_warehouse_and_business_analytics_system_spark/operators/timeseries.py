@@ -53,13 +53,13 @@ from __future__ import annotations
 
 import cmath
 import math
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .scan import SegmentFold, segment_scan
 
 
 def gapfill_interpolate(df: DataFrame, key_col: str, date_col: str,
@@ -110,21 +110,23 @@ def gapfill_interpolate(df: DataFrame, key_col: str, date_col: str,
 # ---------------------------------------------------------------------------
 # Shared scan machinery.
 #
-# The ranged ("two-phase") layout: repartitionByRange on (key, t) so
-# each partition holds a contiguous slice of each key's timeline;
-# localCheckpoint freezes the layout (same contract as pack_sequences)
-# so the summaries pass and the fold pass see identical partitions.
-# One Arrow pass computes per-(partition, key) block summaries; the
-# driver chains carries per key across partitions in pid order (exact
-# algebra of the linear recurrence); a second Arrow pass folds each
-# block from its broadcast carry-in. A key with a billion points uses
-# every partition its range covers; nothing funnels through one task.
+# The ranged layout is the two-phase range scan of ``operators/scan.py``
+# (``segment_scan``): each partition holds a contiguous slice of each
+# key's timeline, per-(partition, key) block summaries chain into
+# carries on the driver (exact algebra of the linear recurrence), and a
+# second Arrow pass folds each block from its broadcast carry-in. A key
+# with a billion points uses every partition its range covers; nothing
+# funnels through one task.
 #
 # The grouped layout: hash repartition on the key alone + sort within
 # partitions — every key lives wholly inside one partition, the fold
-# pass runs with an EMPTY carry map (every first-seen key starts at
-# the head convention), and no summaries pass / collect / broadcast
-# exists at all. This is the numerous-keys path (see module docstring).
+# pass starts every key from its zero carry, and no summaries pass /
+# collect / broadcast exists at all. This is the numerous-keys path
+# (see module docstring).
+#
+# Each scan below is a ``SegmentFold``: its block summary, its carry
+# combine and zero, and its per-segment emit; ``_run_scan`` owns the
+# mode dispatch shared by all three.
 
 _SCALE_LIMIT = 30.0           # ln(max in-chunk rescale ratio)
 _VEC_MIN_DECAY = 1e-250       # below this, rescaling over/underflows
@@ -136,34 +138,12 @@ _DEFAULT_MAX_CARRY_KEYS = 100_000
 _DEFAULT_SPLIT_THRESHOLD = 2_000_000
 
 
-def _segments(pdf: pd.DataFrame):
-    """Yield (key, lo, hi) for each contiguous key run in a sorted
-    batch (keys are contiguous within a sorted partition)."""
-    keys = pdf["k"].to_numpy()
-    cut = np.flatnonzero(keys[1:] != keys[:-1]) + 1
-    for lo, hi in zip(np.r_[0, cut], np.r_[cut, len(keys)]):
-        yield keys[lo], int(lo), int(hi)
-
-
 def _base_frame(df: DataFrame, key_col: str, order_col: str,
                 val_col: str) -> DataFrame:
     return df.select(
         F.col(key_col).cast("string").alias("k"),
         F.col(order_col).alias("t"),
         F.col(val_col).cast("double").alias("x"))
-
-
-def _ranged_layout(base: DataFrame, parts: int) -> DataFrame:
-    return (base.repartitionByRange(parts, "k", "t")
-            .sortWithinPartitions("k", "t")
-            .withColumn("_pid", F.spark_partition_id())
-            .localCheckpoint())
-
-
-def _grouped_layout(base: DataFrame, parts: int) -> DataFrame:
-    return (base.repartition(parts, "k")
-            .sortWithinPartitions("k", "t")
-            .withColumn("_pid", F.spark_partition_id()))
 
 
 def _split_oversized(df: DataFrame, key_col: str, threshold: int,
@@ -189,6 +169,44 @@ def _resolve_mode(base: DataFrame, mode: str, max_carry_keys: int) -> str:
     nkeys = base.agg(
         F.approx_count_distinct("k").alias("n")).first()["n"]
     return "grouped" if nkeys > max_carry_keys else "ranged"
+
+
+def _run_scan(df: DataFrame, key_col: str, order_col: str, val_col: str,
+              fold: SegmentFold, n_partitions: int | None, mode: str,
+              max_carry_keys: int, split_threshold: int) -> DataFrame:
+    """``(key_col, order_col, val_col, *fold.outputs)`` under ``mode``
+    (see the module docstring); "split" runs the hot keys ranged and
+    the tail grouped, then unions."""
+    if mode == "split":
+        hot, rest = _split_oversized(df, key_col, split_threshold)
+        kw = dict(fold=fold, n_partitions=n_partitions,
+                  max_carry_keys=max_carry_keys,
+                  split_threshold=split_threshold)
+        return (_run_scan(hot, key_col, order_col, val_col,
+                          mode="ranged", **kw)
+                .unionByName(_run_scan(rest, key_col, order_col, val_col,
+                                       mode="grouped", **kw)))
+    base = _base_frame(df, key_col, order_col, val_col)
+    mode = _resolve_mode(base, mode, max_carry_keys)
+    parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
+    res = segment_scan(base, fold, parts, grouped=mode == "grouped")
+    return res.select(
+        F.col("k").alias(key_col), F.col("t").alias(order_col),
+        F.col("x").alias(val_col), *fold.outputs)
+
+
+def _head_summary(zero, head, fold_from):
+    """Block summary of a recurrence whose series starts at
+    ``head(x_1)``: (rows, state folded from ``zero``, state folded
+    from the head) — the two states a block can continue from, for a
+    carried-in predecessor or for a block that starts its key."""
+    def summarize(acc, seg):
+        if acc is None:
+            return (len(seg), fold_from(zero, seg),
+                    fold_from(head(float(seg[0])), seg[1:]))
+        n, z0, z1 = acc
+        return n + len(seg), fold_from(z0, seg), fold_from(z1, seg)
+    return summarize
 
 
 def _geom_chunk(decay: float) -> int:
@@ -256,6 +274,31 @@ def _ewma_emit_from(s: float, xs: np.ndarray, out: np.ndarray, lo0: int,
     return s
 
 
+def _ewma_fold(alpha: float, vectorize: bool) -> SegmentFold:
+    one_minus = 1.0 - alpha
+    dcache = (one_minus ** np.arange(1.0, _geom_chunk(one_minus) + 1.0)
+              if vectorize and one_minus >= _VEC_MIN_DECAY else None)
+
+    def fold_from(s, xs):
+        return _ewma_fold_from(s, xs, one_minus, alpha, dcache)
+
+    def combine(carry, block):
+        # carry None: no predecessor, the block starts the key
+        n, l0, l1 = block
+        return l1 if carry is None else carry * (one_minus ** n) + l0
+
+    def emit(s, seg, outs, lo):
+        out = outs["ewma"]
+        if s is None:                       # the key starts here
+            out[lo] = s = float(seg[0])
+            seg, lo = seg[1:], lo + 1
+        return _ewma_emit_from(s, seg, out, lo, one_minus, alpha, dcache)
+
+    return SegmentFold(summarize=_head_summary(0.0, float, fold_from),
+                       combine=combine, zero=None, emit=emit,
+                       outputs=("ewma",))
+
+
 def ewma_scan(df: DataFrame, key_col: str, order_col: str, val_col: str,
               alpha: float = 0.5, n_partitions: int | None = None,
               mode: str = "auto",
@@ -283,119 +326,15 @@ def ewma_scan(df: DataFrame, key_col: str, order_col: str, val_col: str,
     """
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    if mode == "split":
-        hot, rest = _split_oversized(df, key_col, split_threshold)
-        kw = dict(alpha=alpha, n_partitions=n_partitions,
-                  max_carry_keys=max_carry_keys, vectorize=vectorize)
-        return (ewma_scan(hot, key_col, order_col, val_col,
-                          mode="ranged", **kw)
-                .unionByName(ewma_scan(rest, key_col, order_col, val_col,
-                                       mode="grouped", **kw)))
-    spark = df.sparkSession
-    parts = n_partitions or spark.sparkContext.defaultParallelism
-    base = _base_frame(df, key_col, order_col, val_col)
-    one_minus = 1.0 - alpha
-    if one_minus == 0.0:
+    if alpha == 1.0:
         # s_t = x_t under both conventions — no scan state at all.
+        base = _base_frame(df, key_col, order_col, val_col)
         return base.select(
             F.col("k").alias(key_col), F.col("t").alias(order_col),
             F.col("x").alias(val_col), F.col("x").alias("ewma"))
-
-    dcache = (one_minus ** np.arange(1.0, _geom_chunk(one_minus) + 1.0)
-              if vectorize and one_minus >= _VEC_MIN_DECAY else None)
-    mode = _resolve_mode(base, mode, max_carry_keys)
-
-    if mode == "grouped":
-        ranged = _grouped_layout(base, parts)
-        bc = None
-    else:
-        ranged = _ranged_layout(base, parts)
-
-        def summaries(batches: Iterator[pd.DataFrame],
-                      ) -> Iterator[pd.DataFrame]:
-            # per-(partition, key): block length n, the fold from a
-            # ZERO carry (l0), and the fold under the s_1 = x_1 head
-            # convention (l1); blocks may span Arrow batches.
-            state: dict[str, tuple[int, float, float, int]] = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pid = int(pdf["_pid"].iloc[0])
-                xs = pdf["x"].to_numpy(dtype="float64")
-                for k, lo, hi in _segments(pdf):
-                    n, l0, l1, _ = state.get(k, (0, 0.0, 0.0, pid))
-                    seg = xs[lo:hi]
-                    l0 = _ewma_fold_from(l0, seg, one_minus, alpha,
-                                         dcache)
-                    if n == 0:
-                        l1 = _ewma_fold_from(float(seg[0]), seg[1:],
-                                             one_minus, alpha, dcache)
-                    else:
-                        l1 = _ewma_fold_from(l1, seg, one_minus, alpha,
-                                             dcache)
-                    state[k] = (n + len(seg), l0, l1, pid)
-            yield pd.DataFrame(
-                [(k, pid, n, l0, l1)
-                 for k, (n, l0, l1, pid) in state.items()],
-                columns=["k", "_pid", "n", "l0_end", "l1_end"])
-
-        summ = ranged.mapInPandas(
-            summaries,
-            "k string, _pid int, n long, l0_end double, l1_end double",
-        ).collect()
-
-        # chain carries per key across partitions, in pid order
-        carries: dict[tuple[str, int], float | None] = {}
-        by_key: dict[str, list] = {}
-        for r in summ:
-            by_key.setdefault(r["k"], []).append(r)
-        for k, blocks in by_key.items():
-            blocks.sort(key=lambda r: r["_pid"])
-            carry: float | None = None   # None → block starts the key
-            for b in blocks:
-                carries[(k, b["_pid"])] = carry
-                if carry is None:
-                    carry = b["l1_end"]
-                else:
-                    carry = carry * (one_minus ** b["n"]) + b["l0_end"]
-        bc = spark.sparkContext.broadcast(carries)
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cmap = bc.value if bc is not None else {}
-        cur_key: str | None = None
-        s = 0.0
-        started = False
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["_pid"].iloc[0])
-            xs = pdf["x"].to_numpy(dtype="float64")
-            out = np.empty(len(xs))
-            for k, lo, hi in _segments(pdf):
-                if k != cur_key:
-                    cur_key = k
-                    carry = cmap.get((k, pid))
-                    started = carry is not None
-                    s = carry if started else 0.0
-                seg = xs[lo:hi]
-                if not started:
-                    out[lo] = s = float(seg[0])
-                    started = True
-                    s = _ewma_emit_from(s, seg[1:], out, lo + 1,
-                                        one_minus, alpha, dcache)
-                else:
-                    s = _ewma_emit_from(s, seg, out, lo,
-                                        one_minus, alpha, dcache)
-            yield pd.DataFrame(
-                {"k": pdf["k"].to_numpy(), "t": pdf["t"].to_numpy(),
-                 "x": xs, "ewma": out})
-
-    t_type = dict(ranged.dtypes)["t"]
-    res = ranged.mapInPandas(
-        fold, f"k string, t {t_type}, x double, ewma double")
-    return res.select(
-        F.col("k").alias(key_col), F.col("t").alias(order_col),
-        F.col("x").alias(val_col), "ewma")
+    return _run_scan(df, key_col, order_col, val_col,
+                     _ewma_fold(alpha, vectorize), n_partitions, mode,
+                     max_carry_keys, split_threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -420,7 +359,8 @@ def ewma_scan(df: DataFrame, key_col: str, order_col: str, val_col: str,
 # pair) decay, so the same chunked rescaled-cumsum trick applies in
 # complex128; converting back (s = P·z, take the real part) costs one
 # small matmul per chunk. Defective / degenerate transitions (repeated
-# eigenvalue, α=1) fall back to the exact scalar row loop.
+# eigenvalue, α=1) fall back to the exact scalar row loop, whose state
+# is the (level, trend) pair itself.
 
 
 def _holt_step_fn(alpha: float, gamma: float):
@@ -459,9 +399,15 @@ def _holt_setup(alpha: float, gamma: float):
     return lam, P, Pinv, w, dpow
 
 
-def _holt_fold_from(z: np.ndarray, xs: np.ndarray, lam: np.ndarray,
-                    w: np.ndarray, dpow: np.ndarray) -> np.ndarray:
-    """Eigencoord state after folding xs from z."""
+def _holt_fold_from(z, xs: np.ndarray, step, eig):
+    """State after folding xs from z: eigencoords, or the exact
+    (level, trend) row loop when ``eig`` is None."""
+    if eig is None:
+        level, trend = z
+        for x in xs:
+            level, trend = step(level, trend, float(x))
+        return level, trend
+    _, _, _, w, dpow = eig
     chunk = len(dpow)
     for i in range(0, len(xs), chunk):
         seg = xs[i:i + chunk]
@@ -472,10 +418,17 @@ def _holt_fold_from(z: np.ndarray, xs: np.ndarray, lam: np.ndarray,
     return z
 
 
-def _holt_emit_from(z: np.ndarray, xs: np.ndarray, out_l: np.ndarray,
-                    out_b: np.ndarray, lo0: int, lam: np.ndarray,
-                    P: np.ndarray, w: np.ndarray, dpow: np.ndarray,
-                    ) -> np.ndarray:
+def _holt_emit_from(z, xs: np.ndarray, out_l: np.ndarray,
+                    out_b: np.ndarray, lo0: int, step, eig):
+    """Write the folded (level, trend) of xs into out_l/out_b[lo0:];
+    return the final state."""
+    if eig is None:
+        level, trend = z
+        for j, x in enumerate(xs):
+            level, trend = step(level, trend, float(x))
+            out_l[lo0 + j], out_b[lo0 + j] = level, trend
+        return level, trend
+    _, P, _, w, dpow = eig
     chunk = len(dpow)
     for i in range(0, len(xs), chunk):
         seg = xs[i:i + chunk]
@@ -488,6 +441,64 @@ def _holt_emit_from(z: np.ndarray, xs: np.ndarray, out_l: np.ndarray,
         out_b[lo0 + i:lo0 + i + m] = svals[:, 1].real
         z = zs[-1]
     return z
+
+
+def _holt_fold(alpha: float, gamma: float, vectorize: bool) -> SegmentFold:
+    step = _holt_step_fn(alpha, gamma)
+    eig = _holt_setup(alpha, gamma) if vectorize else None
+    # carries are real (level, trend) pairs, chained on the driver; the
+    # fold state is the pair itself, or its eigencoords when vectorized
+    if eig is None:
+        zero = (0.0, 0.0)
+
+        def head(x):
+            return x, 0.0
+
+        def to_real(s):
+            return s
+
+        def start(carry):
+            return carry
+    else:
+        P, Pinv = eig[1], eig[2]
+        zero = np.zeros(2, dtype=complex)
+
+        def head(x):
+            return Pinv[:, 0] * x
+
+        def to_real(z):
+            s = P @ z
+            return s[0].real, s[1].real
+
+        def start(carry):
+            return (None if carry is None
+                    else Pinv @ np.array(carry, dtype=complex))
+
+    def fold_from(z, xs):
+        return _holt_fold_from(z, xs, step, eig)
+
+    om_a = 1.0 - alpha
+    M = np.array([[om_a, om_a], [-gamma * alpha, 1.0 - gamma * alpha]])
+
+    def combine(carry, block):
+        n, z0, z1 = block
+        if carry is None:                   # the block starts the key
+            return to_real(z1)
+        s_out = (np.linalg.matrix_power(M, n) @ np.array(carry)
+                 + np.array(to_real(z0)))
+        return float(s_out[0]), float(s_out[1])
+
+    def emit(z, seg, outs, lo):
+        out_l, out_b = outs["level"], outs["trend"]
+        if z is None:                       # the key starts here
+            x1 = float(seg[0])
+            out_l[lo], out_b[lo] = x1, 0.0
+            z, seg, lo = head(x1), seg[1:], lo + 1
+        return _holt_emit_from(z, seg, out_l, out_b, lo, step, eig)
+
+    return SegmentFold(summarize=_head_summary(zero, head, fold_from),
+                       combine=combine, zero=None, start=start, emit=emit,
+                       outputs=("level", "trend"))
 
 
 def holt_scan(df: DataFrame, key_col: str, order_col: str, val_col: str,
@@ -505,189 +516,55 @@ def holt_scan(df: DataFrame, key_col: str, order_col: str, val_col: str,
     if not 0.0 < alpha <= 1.0 or not 0.0 < gamma <= 1.0:
         raise ValueError(f"alpha/gamma must be in (0, 1], got "
                          f"{alpha}/{gamma}")
-    if mode == "split":
-        hot, rest = _split_oversized(df, key_col, split_threshold)
-        kw = dict(alpha=alpha, gamma=gamma, n_partitions=n_partitions,
-                  max_carry_keys=max_carry_keys, vectorize=vectorize)
-        return (holt_scan(hot, key_col, order_col, val_col,
-                          mode="ranged", **kw)
-                .unionByName(holt_scan(rest, key_col, order_col, val_col,
-                                       mode="grouped", **kw)))
-    spark = df.sparkSession
-    parts = n_partitions or spark.sparkContext.defaultParallelism
-    base = _base_frame(df, key_col, order_col, val_col)
-    step = _holt_step_fn(alpha, gamma)
-    eig = _holt_setup(alpha, gamma) if vectorize else None
-    mode = _resolve_mode(base, mode, max_carry_keys)
-
-    if mode == "grouped":
-        ranged = _grouped_layout(base, parts)
-        bc = None
-    else:
-        ranged = _ranged_layout(base, parts)
-
-        def summaries(batches: Iterator[pd.DataFrame],
-                      ) -> Iterator[pd.DataFrame]:
-            # per-(partition, key): n, zero-state fold (l0, b0), head-
-            # convention fold (l1, b1); eigencoord state when eig is
-            # available, scalar row loop otherwise.
-            if eig is not None:
-                lam, P, Pinv, w, dpow = eig
-                zstate: dict[str, tuple[int, np.ndarray, np.ndarray,
-                                        int]] = {}
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    pid = int(pdf["_pid"].iloc[0])
-                    xs = pdf["x"].to_numpy(dtype="float64")
-                    for k, lo, hi in _segments(pdf):
-                        n, z0, z1, _ = zstate.get(
-                            k, (0, np.zeros(2, dtype=complex),
-                                np.zeros(2, dtype=complex), pid))
-                        seg = xs[lo:hi]
-                        z0 = _holt_fold_from(z0, seg, lam, w, dpow)
-                        if n == 0:
-                            z1 = _holt_fold_from(
-                                Pinv[:, 0] * float(seg[0]), seg[1:],
-                                lam, w, dpow)
-                        else:
-                            z1 = _holt_fold_from(z1, seg, lam, w, dpow)
-                        zstate[k] = (n + len(seg), z0, z1, pid)
-                rows = []
-                for k, (n, z0, z1, pid) in zstate.items():
-                    s0 = P @ z0
-                    s1 = P @ z1
-                    rows.append((k, pid, n, s0[0].real, s0[1].real,
-                                 s1[0].real, s1[1].real))
-            else:
-                state: dict[str, tuple[int, float, float, float, float,
-                                       int]] = {}
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    pid = int(pdf["_pid"].iloc[0])
-                    for k, x in zip(pdf["k"].to_numpy(),
-                                    pdf["x"].to_numpy()):
-                        n, l0, b0, l1, b1, _ = state.get(
-                            k, (0, 0.0, 0.0, 0.0, 0.0, pid))
-                        x = float(x)
-                        l0, b0 = step(l0, b0, x)
-                        if n == 0:
-                            l1, b1 = x, 0.0
-                        else:
-                            l1, b1 = step(l1, b1, x)
-                        state[k] = (n + 1, l0, b0, l1, b1, pid)
-                rows = [(k, pid, n, l0, b0, l1, b1)
-                        for k, (n, l0, b0, l1, b1, pid) in state.items()]
-            yield pd.DataFrame(
-                rows,
-                columns=["k", "_pid", "n", "l0", "b0", "l1", "b1"])
-
-        summ = ranged.mapInPandas(
-            summaries,
-            "k string, _pid int, n long, l0 double, b0 double,"
-            " l1 double, b1 double").collect()
-
-        om_a = 1.0 - alpha
-        M = np.array([[om_a, om_a],
-                      [-gamma * alpha, 1.0 - gamma * alpha]])
-        carries: dict[tuple[str, int], tuple[float, float] | None] = {}
-        by_key: dict[str, list] = {}
-        for r in summ:
-            by_key.setdefault(r["k"], []).append(r)
-        for k, blocks in by_key.items():
-            blocks.sort(key=lambda r: r["_pid"])
-            carry: tuple[float, float] | None = None
-            for b in blocks:
-                carries[(k, b["_pid"])] = carry
-                if carry is None:
-                    carry = (b["l1"], b["b1"])
-                else:
-                    mn = np.linalg.matrix_power(M, int(b["n"]))
-                    s_out = (mn @ np.array([carry[0], carry[1]])
-                             + np.array([b["l0"], b["b0"]]))
-                    carry = (float(s_out[0]), float(s_out[1]))
-        bc = spark.sparkContext.broadcast(carries)
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cmap = bc.value if bc is not None else {}
-        if eig is not None:
-            lam, P, Pinv, w, dpow = eig
-            cur_key: str | None = None
-            z = np.zeros(2, dtype=complex)
-            started = False
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pid = int(pdf["_pid"].iloc[0])
-                xs = pdf["x"].to_numpy(dtype="float64")
-                out_l = np.empty(len(xs))
-                out_b = np.empty(len(xs))
-                for k, lo, hi in _segments(pdf):
-                    if k != cur_key:
-                        cur_key = k
-                        carry = cmap.get((k, pid))
-                        started = carry is not None
-                        if started:
-                            z = Pinv @ np.array(
-                                [carry[0], carry[1]], dtype=complex)
-                    seg = xs[lo:hi]
-                    if not started:
-                        x1 = float(seg[0])
-                        out_l[lo], out_b[lo] = x1, 0.0
-                        started = True
-                        z = _holt_emit_from(
-                            Pinv[:, 0] * x1, seg[1:], out_l, out_b,
-                            lo + 1, lam, P, w, dpow)
-                    else:
-                        z = _holt_emit_from(z, seg, out_l, out_b, lo,
-                                            lam, P, w, dpow)
-                yield pd.DataFrame(
-                    {"k": pdf["k"].to_numpy(),
-                     "t": pdf["t"].to_numpy(), "x": xs,
-                     "level": out_l, "trend": out_b})
-        else:
-            cur_key = None
-            lev = trd = 0.0
-            started = False
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pid = int(pdf["_pid"].iloc[0])
-                out = []
-                for k, t, x in zip(pdf["k"].to_numpy(),
-                                   pdf["t"].to_numpy(),
-                                   pdf["x"].to_numpy()):
-                    if k != cur_key:
-                        cur_key, started = k, False
-                        carry = cmap.get((k, pid))
-                        if carry is not None:
-                            lev, trd, started = carry[0], carry[1], True
-                    x = float(x)
-                    if started:
-                        lev, trd = step(lev, trd, x)
-                    else:
-                        lev, trd, started = x, 0.0, True
-                    out.append((k, t, x, lev, trd))
-                yield pd.DataFrame(
-                    out, columns=["k", "t", "x", "level", "trend"])
-
-    t_type = dict(ranged.dtypes)["t"]
-    res = ranged.mapInPandas(
-        fold, f"k string, t {t_type}, x double, level double,"
-              " trend double")
-    return res.select(
-        F.col("k").alias(key_col), F.col("t").alias(order_col),
-        F.col("x").alias(val_col), "level", "trend")
+    return _run_scan(df, key_col, order_col, val_col,
+                     _holt_fold(alpha, gamma, vectorize), n_partitions,
+                     mode, max_carry_keys, split_threshold)
 
 
 # ---------------------------------------------------------------------------
 # Grouped running SUM / MIN / MAX as the same two-phase scan with an
 # ADDITIVE carry — the primitive behind running-total reports and
-# CUSUM change-point detection. packing's range cumsum covers the
-# global single-sequence case; this is the per-key variant with
-# prefix-extrema, for series analytics where `Window.partitionBy(key)`
-# would put each key on one reducer.
+# CUSUM change-point detection. ``scan.running_total`` covers the
+# SQL-window case; this is the per-key variant with prefix-extrema,
+# for series analytics where `Window.partitionBy(key)` would put each
+# key on one reducer.
+#
+# Both Arrow passes are numpy-vectorized per key SEGMENT: np.cumsum is
+# a sequential accumulate, np.minimum/maximum.accumulate are exact
+# selections — ~50x the row-loop throughput, and still within the same
+# few-ulp reassociation envelope the tests pin at 1e-9.
+
+_CUMSUM_ZERO = (0.0, float("inf"), float("-inf"))
+
+
+def _cumsum_summarize(acc, seg):
+    s, mn, mx = _CUMSUM_ZERO if acc is None else acc
+    run = s + np.cumsum(seg)
+    return (float(run[-1]), min(mn, float(run.min())),
+            max(mx, float(run.max())))
+
+
+def _cumsum_combine(c, block):
+    bsum, bmin, bmax = block
+    return (c[0] + bsum, min(c[1], c[0] + bmin), max(c[2], c[0] + bmax))
+
+
+def _cumsum_emit(carry, seg, outs, lo):
+    s, mn, mx = carry
+    hi = lo + len(seg)
+    run = s + np.cumsum(seg)
+    outs["run_sum"][lo:hi] = run
+    rmin = outs["run_min"][lo:hi] = np.minimum(
+        mn, np.minimum.accumulate(run))
+    rmax = outs["run_max"][lo:hi] = np.maximum(
+        mx, np.maximum.accumulate(run))
+    return float(run[-1]), float(rmin[-1]), float(rmax[-1])
+
+
+_CUMSUM_FOLD = SegmentFold(summarize=_cumsum_summarize,
+                           combine=_cumsum_combine, zero=_CUMSUM_ZERO,
+                           emit=_cumsum_emit,
+                           outputs=("run_sum", "run_min", "run_max"))
 
 
 def cumsum_scan(df: DataFrame, key_col: str, order_col: str, val_col: str,
@@ -704,102 +581,5 @@ def cumsum_scan(df: DataFrame, key_col: str, order_col: str, val_col: str,
     so only float reassociation (a few ulps) separates this from the
     sequential fold; gates snap to a grid as with ewma_scan. ``mode``
     as in :func:`ewma_scan`."""
-    if mode == "split":
-        hot, rest = _split_oversized(df, key_col, split_threshold)
-        kw = dict(n_partitions=n_partitions, max_carry_keys=max_carry_keys)
-        return (cumsum_scan(hot, key_col, order_col, val_col,
-                            mode="ranged", **kw)
-                .unionByName(cumsum_scan(rest, key_col, order_col, val_col,
-                                         mode="grouped", **kw)))
-    spark = df.sparkSession
-    parts = n_partitions or spark.sparkContext.defaultParallelism
-    base = _base_frame(df, key_col, order_col, val_col)
-    mode = _resolve_mode(base, mode, max_carry_keys)
-
-    # Both Arrow passes are numpy-vectorized per key SEGMENT (keys are
-    # contiguous within a sorted partition): np.cumsum is a sequential
-    # accumulate, np.minimum/maximum.accumulate are exact selections —
-    # ~50x the row-loop throughput, and still within the same few-ulp
-    # reassociation envelope the tests pin at 1e-9.
-
-    if mode == "grouped":
-        ranged = _grouped_layout(base, parts)
-        bc = None
-    else:
-        ranged = _ranged_layout(base, parts)
-
-        def summaries(batches: Iterator[pd.DataFrame],
-                      ) -> Iterator[pd.DataFrame]:
-            state: dict[str, tuple[float, float, float, int]] = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pid = int(pdf["_pid"].iloc[0])
-                xs = pdf["x"].to_numpy(dtype="float64")
-                for k, lo, hi in _segments(pdf):
-                    s, mn, mx, _ = state.get(
-                        k, (0.0, float("inf"), float("-inf"), pid))
-                    run = s + np.cumsum(xs[lo:hi])
-                    state[k] = (float(run[-1]),
-                                min(mn, float(run.min())),
-                                max(mx, float(run.max())), pid)
-            yield pd.DataFrame(
-                [(k, pid, s, mn, mx)
-                 for k, (s, mn, mx, pid) in state.items()],
-                columns=["k", "_pid", "bsum", "bmin", "bmax"])
-
-        summ = ranged.mapInPandas(
-            summaries,
-            "k string, _pid int, bsum double, bmin double, bmax double",
-        ).collect()
-
-        carries: dict[tuple[str, int], tuple[float, float, float]] = {}
-        by_key: dict[str, list] = {}
-        for r in summ:
-            by_key.setdefault(r["k"], []).append(r)
-        for k, blocks in by_key.items():
-            blocks.sort(key=lambda r: r["_pid"])
-            c = (0.0, float("inf"), float("-inf"))
-            for b in blocks:
-                carries[(k, b["_pid"])] = c
-                c = (c[0] + b["bsum"],
-                     min(c[1], c[0] + b["bmin"]),
-                     max(c[2], c[0] + b["bmax"]))
-        bc = spark.sparkContext.broadcast(carries)
-
-    _zero_carry = (0.0, float("inf"), float("-inf"))
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cmap = bc.value if bc is not None else {}
-        cur_key: str | None = None
-        s = mn = mx = 0.0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["_pid"].iloc[0])
-            xs = pdf["x"].to_numpy(dtype="float64")
-            run = np.empty(len(xs))
-            rmin = np.empty(len(xs))
-            rmax = np.empty(len(xs))
-            for k, lo, hi in _segments(pdf):
-                if k != cur_key:
-                    cur_key = k
-                    s, mn, mx = cmap.get((k, pid), _zero_carry)
-                seg = s + np.cumsum(xs[lo:hi])
-                run[lo:hi] = seg
-                rmin[lo:hi] = np.minimum(mn, np.minimum.accumulate(seg))
-                rmax[lo:hi] = np.maximum(mx, np.maximum.accumulate(seg))
-                s, mn, mx = float(seg[-1]), float(rmin[hi - 1]), \
-                    float(rmax[hi - 1])
-            yield pd.DataFrame(
-                {"k": pdf["k"].to_numpy(), "t": pdf["t"].to_numpy(),
-                 "x": xs, "run_sum": run, "run_min": rmin,
-                 "run_max": rmax})
-
-    t_type = dict(ranged.dtypes)["t"]
-    res = ranged.mapInPandas(
-        fold, f"k string, t {t_type}, x double, run_sum double,"
-              " run_min double, run_max double")
-    return res.select(
-        F.col("k").alias(key_col), F.col("t").alias(order_col),
-        F.col("x").alias(val_col), "run_sum", "run_min", "run_max")
+    return _run_scan(df, key_col, order_col, val_col, _CUMSUM_FOLD,
+                     n_partitions, mode, max_carry_keys, split_threshold)

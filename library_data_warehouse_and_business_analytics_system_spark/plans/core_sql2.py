@@ -152,7 +152,8 @@ def surrogate_keys_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators=("S8",),
 )
 def fact_surrogate_keys_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FACT-scale surrogate path (`operators/surrogate.py:38-74`,
+    """The FACT-scale surrogate path (`surrogate.with_fact_surrogate_key`
+    on the `operators/scan.py` two-phase scan,
     reproducing `05_InitialLoading.sql:68-71` sequence semantics at
     fact grain): partition-local row_number + cumulative partition
     offsets — no global single-partition window, the shape the 100×

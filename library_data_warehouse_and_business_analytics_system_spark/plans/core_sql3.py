@@ -818,7 +818,7 @@ def weekly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Distribution-rank family: NTILE / PERCENT_RANK / CUME_DIST — the
 # Oracle analytic functions the reference's report queries draw from,
 # computed WITHOUT a global single-partition window (two-phase range
-# rank, operators/ranking.py). The strict (spend DESC, custkey)
+# rank, operators/ranking.py on operators/scan.py). The strict (spend DESC, custkey)
 # order makes every window double bit-exact cross-engine.
 
 
@@ -853,7 +853,8 @@ def customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer spend deciles with the full distribution-rank family.
     The naive plan is ``ntile(10).over(Window.orderBy(...))`` — an
     Exchange SinglePartition of every customer. This uses the
-    two-phase range-rank (``operators/ranking.py``): parallel range
+    two-phase range-rank (``operators/ranking.py`` on
+    ``operators/scan.py``): parallel range
     shuffle, driver prefix offsets, per-partition row_number, and
     NTILE/PERCENT_RANK/CUME_DIST as closed-form arithmetic over
     (rank, N) — bit-identical to the window definitions because the

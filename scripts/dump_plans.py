@@ -83,8 +83,8 @@ NOTES = {
                          "gate, but over the POST-MOVE index: the reroute "
                          "upsert (one atomic replace_parts commit evicting "
                          "+ placing 40 moved ids) ran at plan-build time; "
-                         "reroute-vs-rebuild cost measured in "
-                         "scripts/probe_scale_round12.py (3-4x cheaper at "
+                         "reroute-vs-rebuild cost: see \"Re-embedding "
+                         "maintenance\" in PLANS.md (3-4x cheaper at "
                          "1M vectors).",
     "bitext_margin_pairs_capped": "the production mining path end-to-end: "
                                   "hashed sides are id-only (table, "
@@ -149,7 +149,7 @@ def main() -> None:
            "ever holds the series.", "",
            "- **Re-embedding maintenance (reroute vs rebuild, r12)**: "
            "`ann_index_upsert(on_move=\"reroute\")` measured at 1M×64-d / "
-           "64 cells (scripts/probe_scale_round12.py): full rebuild "
+           "64 cells (r12): full rebuild "
            "94.5 s; 10k SCATTERED re-embeddings reroute in 31.5 s (3.0× — "
            "touched set ≈ all cells, but no kmeans retrain); 10k "
            "CELL-LOCAL re-embeddings in 23.4 s (4.0× — ~8 of 64 "

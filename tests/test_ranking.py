@@ -32,7 +32,7 @@ def _window_truth(df, n_tiles):
 
 
 @pytest.mark.parametrize("n,tiles", [(97, 10), (100, 10), (5, 7),
-                                     (64, 8), (23, 4)])
+                                     (64, 8), (23, 4), (0, 10)])
 def test_rank_stats_equal_single_window(spark, n, tiles):
     df = _df(spark, n)
     got = with_rank_stats(df, [F.col("v").desc(), F.col("id")],
@@ -117,6 +117,21 @@ def test_group_rank_partition_count_invariance(spark):
             base = got
         else:
             assert got == base
+
+
+def test_group_rank_null_group_spans_partitions(spark):
+    """A NULL group is one group (SQL PARTITION BY): when its rows span
+    range partitions, the later blocks still get their carry-in."""
+    rows = [(None if i < 200 else "a", float((i * 193) % 997), i)
+            for i in range(400)]
+    df = spark.createDataFrame(rows, "g string, x double, k long")
+    got = with_group_rank(df, ["g"], [F.col("x"), F.col("k")],
+                          n_partitions=4)
+    w = Window.partitionBy("g").orderBy("x", "k")
+    ref = df.withColumn("group_rank", F.row_number().over(w).cast("long"))
+    a = {r["k"]: r["group_rank"] for r in got.collect()}
+    b = {r["k"]: r["group_rank"] for r in ref.collect()}
+    assert a == b
 
 
 def test_group_quantile_disc_is_lower_median(spark):
