@@ -9,7 +9,9 @@ Granularity choices:
 - DIMENSIONS are plain txlog tables written whole-generation: they
   are small (members/books/suppliers), SCD2 touches arbitrary rows,
   and the surrogate sequence is global — one atomic overwrite per
-  load is both correct and cheap.
+  load that changes it is both correct and cheap. A dim the delta
+  holds no rows for is not rewritten; the load's manifest keeps
+  pinning its current commit.
 - FACTS are partitioned txlog tables on a derived ``yearKey``
   (``dim_date.cal_year`` of the row's dateKey): the delta's rows land
   in a handful of recent years, so ``tx_merge_parts`` rewrites only
@@ -132,14 +134,17 @@ def subsequent_load_durable(spark: SparkSession, root: str,
     if "book_titles" in oltp_delta:
         dims["dim_book"] = INC.insert_new_dim_books(
             dims["dim_book"], oltp_delta["book_titles"])
+        tx_write(dims["dim_book"], f"{root}/dim_book", mode="overwrite")
     if "members" in oltp_delta:
         dims["dim_members"] = INC.insert_new_dim_members(
             dims["dim_members"], oltp_delta["members"], as_of)
+        tx_write(dims["dim_members"], f"{root}/dim_members",
+                 mode="overwrite")
     if "suppliers" in oltp_delta:
         dims["dim_suppliers"] = INC.insert_new_dim_suppliers(
             dims["dim_suppliers"], oltp_delta["suppliers"])
-    for n in ("dim_book", "dim_members", "dim_suppliers"):
-        tx_write(dims[n], f"{root}/{n}", mode="overwrite")
+        tx_write(dims["dim_suppliers"], f"{root}/dim_suppliers",
+                 mode="overwrite")
 
     dim_date = dims["dim_date"]
 

@@ -35,15 +35,11 @@ reference re-loads, which is exactly the rewrite this path avoids.
 
 from __future__ import annotations
 
-import uuid
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .txlog import (
-    _DATA, _entries, _latest_checkpoint, _publish, _replay_fold,
-    tx_latest_id,
+    _entries, _latest_checkpoint, _publish, _read_dirs, _replay_fold,
+    _stage_write, tx_latest_id,
 )
 
 
@@ -59,9 +55,7 @@ def tx_delete_keys(keys_df: DataFrame, table: str,
         for e in _entries(table):
             if e.get("txn") == txn_id:
                 return e["id"]
-    stage = f"{_DATA}/{uuid.uuid4().hex}"
-    (keys_df.select(*key_cols).distinct()
-     .write.parquet(str(Path(table) / stage)))
+    stage = _stage_write(keys_df.select(*key_cols).distinct(), table)
     return _publish(table, {"mode": "delete", "dir": stage,
                             "keys": list(key_cols)},
                     max_retries, txn_id, expect_latest=None)
@@ -119,9 +113,9 @@ def tx_read_mor(spark: SparkSession, table: str,
     for era_idx, dirs in enumerate(eras):
         if not dirs:
             continue
-        df = spark.read.parquet(*[str(Path(table) / d) for d in dirs])
+        df = _read_dirs(spark, table, dirs)
         for d_id, d_dir, keys in dels[era_idx:]:
-            kdf = spark.read.parquet(str(Path(table) / d_dir))
+            kdf = _read_dirs(spark, table, [d_dir])
             df = df.join(kdf, on=list(keys), how="left_anti")
         out = df if out is None else out.unionByName(df)
     return out
@@ -152,9 +146,7 @@ def tx_compact_deletes(spark: SparkSession, table: str,
     delete sidecars become vacuum-eligible history. The rollup a
     nightly maintenance window runs after a day of cheap deletes."""
     latest = tx_latest_id(table)
-    snap = tx_read_mor(spark, table)
-    stage = f"{_DATA}/{uuid.uuid4().hex}"
-    snap.write.parquet(str(Path(table) / stage))
+    stage = _stage_write(tx_read_mor(spark, table), table)
     return _publish(table, {"mode": "overwrite", "dir": stage,
                             "compacted_deletes": True},
                     max_retries, txn_id=None, expect_latest=latest)

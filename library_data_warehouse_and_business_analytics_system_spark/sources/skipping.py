@@ -54,7 +54,9 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from .txlog import _DATA, _entries, _latest_checkpoint, _publish, _replay
+from .txlog import (
+    _entries, _latest_checkpoint, _publish, _read_dirs, _replay, _stage_write,
+)
 
 _TYPES = (int, float, str)
 
@@ -127,16 +129,13 @@ def tx_write_stats(df: DataFrame, table: str, stats_cols: list[str],
     """``tx_write`` that additionally records per-commit min/max for
     ``stats_cols``, harvested from the staged parquet footers
     (metadata-only — the data is not re-scanned)."""
-    import uuid as _uuid
-
     if mode not in ("append", "overwrite"):
         raise ValueError(f"tx_write_stats: unknown mode {mode!r}")
     if txn_id is not None:
         for e in _entries(table):
             if e.get("txn") == txn_id:
                 return e["id"]
-    stage = f"{_DATA}/{_uuid.uuid4().hex}"
-    df.write.parquet(str(Path(table) / stage))
+    stage = _stage_write(df, table)
     stats = _footer_stats(Path(table) / stage, stats_cols)
     payload = {"mode": mode, "dir": stage}
     if stats:
@@ -190,9 +189,8 @@ def tx_read_pruned(spark: SparkSession, table: str, col: str,
         keep.append(d)
     if not keep:
         # predicate excludes every dir: empty frame with the schema
-        df = spark.read.parquet(*[str(Path(table) / d) for d in dirs])
-        return df.where("1=0")
-    df = spark.read.parquet(*[str(Path(table) / d) for d in keep])
+        return _read_dirs(spark, table, dirs).where("1=0")
+    df = _read_dirs(spark, table, keep)
     from pyspark.sql import functions as F
     cond: Column | None = None
     if lo is not None:
@@ -240,10 +238,10 @@ def _bloom_positions_py(value, m: int, k: int) -> list[int]:
             for i in range(k)]
 
 
-def _build_bloom_sidecar(spark: SparkSession, stage_path: Path,
+def _build_bloom_sidecar(spark: SparkSession, table: str, d: str,
                          col: str, n_rows: int, fpp: float) -> dict:
-    """Aggregate the staged dir's bloom bitset distributed (bit-OR of
-    64-bit words, ≤ m/64 rows collected) and write it as
+    """Aggregate the staged dir ``d``'s bloom bitset distributed
+    (bit-OR of 64-bit words, ≤ m/64 rows collected) and write it as
     ``_bloom_<col>.json`` inside the stage dir. Returns the {m, k}
     entry for the commit payload."""
     import base64
@@ -252,7 +250,7 @@ def _build_bloom_sidecar(spark: SparkSession, stage_path: Path,
     from pyspark.sql import functions as F
 
     m, k = _bloom_params(n_rows, fpp)
-    staged = spark.read.parquet(str(stage_path))
+    staged = _read_dirs(spark, table, [d])
     words = (
         staged.select(F.explode(_bloom_positions_expr(col, m, k)).alias("b"))
         .where(F.col("b").isNotNull())
@@ -267,7 +265,7 @@ def _build_bloom_sidecar(spark: SparkSession, stage_path: Path,
         base = int(row["w"]) * 8
         for byte_i in range(8):
             bitset[base + byte_i] |= (word >> (8 * byte_i)) & 0xFF
-    sidecar = stage_path / f"_bloom_{col}.json"
+    sidecar = Path(table) / d / f"_bloom_{col}.json"
     sidecar.write_text(json.dumps(
         {"m": m, "k": k,
          "bits": base64.b64encode(bytes(bitset)).decode()}))
@@ -284,8 +282,6 @@ def tx_write_bloom(df: DataFrame, table: str, bloom_cols: list[str],
     columns), sized for ``fpp`` at the staged row count (row count
     read from the parquet footers — no extra scan). Composes with
     min/max stats via ``stats_cols``."""
-    import uuid as _uuid
-
     import pyarrow.parquet as pq
 
     if mode not in ("append", "overwrite"):
@@ -294,14 +290,13 @@ def tx_write_bloom(df: DataFrame, table: str, bloom_cols: list[str],
         for e in _entries(table):
             if e.get("txn") == txn_id:
                 return e["id"]
-    stage = f"{_DATA}/{_uuid.uuid4().hex}"
+    stage = _stage_write(df, table)
     stage_path = Path(table) / stage
-    df.write.parquet(str(stage_path))
     n_rows = sum(pq.ParquetFile(f).metadata.num_rows
                  for f in stage_path.rglob("*.parquet"))
     spark = df.sparkSession
     payload: dict = {"mode": mode, "dir": stage}
-    blooms = {c: _build_bloom_sidecar(spark, stage_path, c, n_rows, fpp)
+    blooms = {c: _build_bloom_sidecar(spark, table, stage, c, n_rows, fpp)
               for c in bloom_cols}
     if blooms:
         payload["bloom"] = blooms
@@ -364,10 +359,8 @@ def tx_read_point(spark: SparkSession, table: str, col: str, value,
             if d not in blooms
             or _bloom_might_contain(table, d, col, blooms[d], value)]
     if not keep:
-        df = spark.read.parquet(*[str(Path(table) / d) for d in dirs])
-        return df.where("1=0")
-    df = spark.read.parquet(*[str(Path(table) / d) for d in keep])
-    return df.where(F.col(col) == F.lit(value))
+        return _read_dirs(spark, table, dirs).where("1=0")
+    return _read_dirs(spark, table, keep).where(F.col(col) == F.lit(value))
 
 
 # ---------------------------------------------------------------------------
@@ -514,9 +507,8 @@ def tx_read_parts_pruned(spark: SparkSession, table: str, col: str,
             continue
         keep.append(d)
     if not keep:
-        df = spark.read.parquet(*[str(Path(table) / d) for d in all_dirs])
-        return df.where("1=0")
-    df = spark.read.parquet(*[str(Path(table) / d) for d in keep])
+        return _read_dirs(spark, table, all_dirs).where("1=0")
+    df = _read_dirs(spark, table, keep)
     cond = None
     if lo is not None:
         cond = F.col(col) >= F.lit(lo)
@@ -602,7 +594,7 @@ def tx_refresh_stats(spark: SparkSession, table: str,
                         pass  # unreadable: rebuild below
                 n_rows = sum(pq.ParquetFile(f).metadata.num_rows
                              for f in dpath.rglob("*.parquet"))
-                per_col[c] = _build_bloom_sidecar(spark, dpath, c,
+                per_col[c] = _build_bloom_sidecar(spark, table, d, c,
                                                   n_rows, fpp)
             return d, per_col
 

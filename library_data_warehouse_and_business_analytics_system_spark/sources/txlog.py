@@ -13,6 +13,7 @@ Layout::
 
     table/
       data/<uuid>/part-*.parquet               (immutable once logged)
+      data/<uuid>/_schema.json                 (the staged rows' schema)
       _txlog/00000001.json … 0000000N.json     (one file per commit)
 
 - WRITE: stage the data directory first, then publish it by creating
@@ -24,6 +25,17 @@ Layout::
 - READ: replay the log in id order; an ``overwrite`` entry resets the
   visible set, an ``append`` adds to it. Readers never list ``data/``
   — only logged dirs — so staged/orphaned writes cannot leak.
+- SCHEMA: every staged dir carries a ``_schema.json`` sidecar at its
+  root (a partitioned stage's ``_part=<v>`` subdirs share their
+  parent's) holding the schema Spark's parquet reader would infer —
+  the written frame's schema with every field nullable. Reads pass it
+  to ``spark.read.schema`` and skip the footer-inference job. They
+  fall back to inference when any visible dir lacks a sidecar (dirs
+  staged before sidecars existed, or by pyarrow), when the visible
+  dirs' sidecars differ (an append that evolved the schema), and for
+  ``merge_schema=True``. A logged dir never changes, so its sidecar
+  travels with it through checkpoint, truncate, restore and shallow
+  clone, and vacuum removes it along with the dir.
 - VACUUM: delete UNREFERENCED data dirs (staged-then-crashed orphans)
   older than a retention window. Every LOGGED dir is kept — time
   travel needs it — and the retention window protects a dir another
@@ -51,9 +63,13 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, \
+    StructType
 
 _LOG = "_txlog"
 _DATA = "data"
+_SCHEMA = "_schema.json"
+_PART = "_part"
 
 
 def _log_dir(table: str) -> Path:
@@ -239,6 +255,71 @@ def tx_latest_id(table: str) -> int:
     return max(ids) if ids else 0
 
 
+def _as_nullable(t: DataType) -> DataType:
+    """``t`` with every field, array element and map value nullable —
+    what Spark's file reader turns a written schema into."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType),
+                                       True, f.metadata) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType),
+                       True)
+    return t
+
+
+def _write_schema(stage_path: Path, schema: StructType) -> None:
+    (stage_path / _SCHEMA).write_text(_as_nullable(schema).json())
+
+
+def _stage_write(df: DataFrame, table: str,
+                 partition_by: str | None = None) -> str:
+    """Write ``df`` into a fresh ``data/<uuid>`` dir (split by
+    ``partition_by`` when given) plus its schema sidecar; returns the
+    dir relative to the table root. Publishing it is the caller's
+    step."""
+    stage = f"{_DATA}/{uuid.uuid4().hex}"
+    path = Path(table) / stage
+    writer = df.write if partition_by is None \
+        else df.write.partitionBy(partition_by)
+    writer.parquet(str(path))
+    _write_schema(path, StructType(
+        [f for f in df.schema.fields if f.name != partition_by]))
+    return stage
+
+
+def _logged_schema(paths: list[Path]) -> StructType | None:
+    """The one schema every dir's sidecar records, or None when a dir
+    has none or two sidecars differ (the reader must infer)."""
+    texts = set()
+    for root in {p.parent if p.name.startswith(f"{_PART}=") else p
+                 for p in paths}:
+        try:
+            texts.add((root / _SCHEMA).read_text())
+        except FileNotFoundError:
+            return None
+    if len(texts) != 1:
+        return None
+    return StructType.fromJson(json.loads(texts.pop()))
+
+
+def _read_dirs(spark: SparkSession, table: str, dirs: list[str],
+               merge_schema: bool = False) -> DataFrame:
+    """One parquet scan over logged ``dirs`` (relative to ``table``, or
+    absolute for a shallow clone). Uses the dirs' shared schema sidecar
+    when there is one, so the read launches no inference job."""
+    paths = [Path(table) / d for d in dirs]
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    else:
+        schema = _logged_schema(paths)
+        if schema is not None:
+            reader = reader.schema(schema)
+    return reader.parquet(*[str(p) for p in paths])
+
+
 def tx_write(df: DataFrame, table: str, mode: str = "append",
              max_retries: int = 10, txn_id: str | None = None,
              expect_latest: int | None = None) -> int:
@@ -268,8 +349,7 @@ def tx_write(df: DataFrame, table: str, mode: str = "append",
         raise TxConflict(  # cheap pre-stage check; the loop re-checks
             f"tx_write: {table} is at commit {tx_latest_id(table)}, "
             f"not the expected snapshot {expect_latest}")
-    stage = f"{_DATA}/{uuid.uuid4().hex}"
-    df.write.parquet(str(Path(table) / stage))
+    stage = _stage_write(df, table)
     return _publish(table, {"mode": mode, "dir": stage},
                     max_retries, txn_id, expect_latest)
 
@@ -361,7 +441,8 @@ def tx_read(spark: SparkSession, table: str,
     ``merge_schema=True`` unions the schemas of all visible commits
     (columns added by later appends surface as NULL on earlier
     generations) — the read side of schema evolution; the default
-    keeps parquet's cheap single-footer schema."""
+    takes the dirs' schema sidecar (no Spark job), or else one
+    footer's schema."""
     if as_of_ts is not None:
         if as_of is not None:
             raise ValueError("tx_read: pass as_of OR as_of_ts, not both")
@@ -371,10 +452,7 @@ def tx_read(spark: SparkSession, table: str,
         raise FileNotFoundError(
             f"tx_read: no commits in {table}"
             + (f" as of {as_of}" if as_of is not None else ""))
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*[str(Path(table) / d) for d in dirs])
+    return _read_dirs(spark, table, dirs, merge_schema)
 
 
 def _live_dir_meta(cp: dict | None, entries: list[dict],
@@ -652,21 +730,23 @@ def tx_vacuum(table: str, retention_sec: float = 3600.0) -> list[str]:
 # delta's keys instead of reloading the target (VERDICT r6 item 3:
 # a daily 0.1% delta must not rewrite a 100 TB fact).
 
-_PART = "_part"
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _stage_parts(df: DataFrame, table: str, part_col: str) -> dict[str, str]:
+def _stage_parts(df: DataFrame, table: str, part_col: str,
+                 arrange=None) -> dict[str, str]:
     """Stage ``df`` split by ``part_col`` into one data dir per
     partition value (single write job via ``partitionBy`` on a
     duplicated ``_part`` column, so the real column stays IN the
     files and reads need no partition-value reconstruction).
+    ``arrange(tagged) -> DataFrame`` lays out the ``_part``-tagged
+    rows before the write (OPTIMIZE's Z-order clustering).
     Returns {partition value: staged dir (relative to table root)}."""
     from urllib.parse import unquote
 
-    stage = f"{_DATA}/{uuid.uuid4().hex}"
-    (df.withColumn(_PART, df[part_col].cast("string"))
-       .write.partitionBy(_PART).parquet(str(Path(table) / stage)))
+    tagged = df.withColumn(_PART, df[part_col].cast("string"))
+    stage = _stage_write(tagged if arrange is None else arrange(tagged),
+                         table, partition_by=_PART)
     out: dict[str, str] = {}
     for d in (Path(table) / stage).iterdir():
         if not d.name.startswith(f"{_PART}="):
@@ -753,10 +833,7 @@ def tx_read_parts(spark: SparkSession, table: str,
         raise FileNotFoundError(
             f"tx_read_parts: no visible partitions in {table}"
             + (f" for {part_values}" if part_values is not None else ""))
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*[str(Path(table) / d) for d in dirs])
+    return _read_dirs(spark, table, dirs, merge_schema)
 
 
 def tx_merge_parts(spark: SparkSession, table: str, source: DataFrame,
@@ -787,9 +864,16 @@ def tx_merge_parts(spark: SparkSession, table: str, source: DataFrame,
     e.g. a NOT-EXISTS append with a retro-correction
     (``lambda cur, src: cap(insert_not_exists(cur, src, keys))``).
     It runs over the TOUCHED partitions' rows only and must keep every
-    row's ``part_col`` unchanged; with ``merge_fn`` set, ``update_cols``
-    and ``condition`` must be None. On a first merge into an empty
-    table it receives ``source.limit(0)`` as ``current``.
+    row's ``part_col`` unchanged — a row staged into any other
+    partition raises ``ValueError`` before the publish, since the
+    ``replace_parts`` commit would drop that partition's existing
+    rows. With ``merge_fn`` set, ``update_cols`` and ``condition``
+    must be None. On a first merge into an empty table it receives
+    ``source.limit(0)`` as ``current``.
+
+    ``source`` is evaluated once: past the idempotence and conflict
+    pre-checks it is materialised with ``localCheckpoint``, and both
+    the touched-partition scan and the staged write read that copy.
 
     ``txn_id`` makes the merge IDEMPOTENT under redelivery (the
     ``tx_write`` txnAppId pattern): a micro-batch replayed after a
@@ -826,14 +910,15 @@ def tx_merge_parts(spark: SparkSession, table: str, source: DataFrame,
             "be in update_cols — a merge that changes a row's "
             "partition would corrupt the table")
 
-    def combine(current: DataFrame) -> DataFrame:
+    def combine(current: DataFrame, src: DataFrame) -> DataFrame:
         if merge_fn is not None:
-            return merge_fn(current, source)
-        return merge_upsert(current, source, keys,
+            return merge_fn(current, src)
+        return merge_upsert(current, src, keys,
                             update_cols=update_cols, condition=condition)
 
     if not tx_exists(table):
-        merged = combine(source.limit(0)) if merge_fn is not None else source
+        merged = (combine(source.limit(0), source) if merge_fn is not None
+                  else source)
         return tx_write_parts(
             merged, table, part_col, mode="overwrite",
             expect_latest=0 if expect_latest is None else expect_latest,
@@ -850,28 +935,28 @@ def tx_merge_parts(spark: SparkSession, table: str, source: DataFrame,
                 f"not the expected snapshot {expect_latest}")
     base = tx_latest_id(table) if expect_latest is None else expect_latest
     state = _visible_parts(table, as_of=base)
+    source = source.localCheckpoint()
     touched = sorted({
         str(r[0]) for r in
         source.select(source[part_col].cast("string")).distinct().collect()})
     existing_dirs = [d for v in touched for d in state.get(v, [])]
     if existing_dirs:
-        current = spark.read.parquet(
-            *[str(Path(table) / d) for d in existing_dirs])
-        merged = combine(current)
+        current = _read_dirs(spark, table, existing_dirs)
+        merged = combine(current, source)
         stored_schema = current.schema
     else:
         # All-new partitions. The drift guard below must still run
         # (ADVICE r12: a drifted source touching only NEW partitions
         # used to commit unchecked — the exact mixed-generation
         # parquet the guard exists to prevent), so read the stored
-        # schema from any visible dir's footer (metadata-only; no
+        # schema of any visible dir (its sidecar, else its footer; no
         # row is scanned). A table with zero visible dirs has no
         # stored schema to preserve — first insert defines it.
         all_dirs = next((ds for ds in state.values() if ds), None)
-        stored_schema = (spark.read.parquet(
-            str(Path(table) / all_dirs[0])).schema
-            if all_dirs else None)
-        merged = combine(source.limit(0)) if merge_fn is not None else source
+        stored_schema = (_read_dirs(spark, table, all_dirs[:1]).schema
+                         if all_dirs else None)
+        merged = (combine(source.limit(0), source) if merge_fn is not None
+                  else source)
     # Dtype-drift guard, ALL branches: the merge's WHEN-branch type
     # unification (or a raw insert into new partitions) silently
     # WIDENS a column when the source's dtype differs from the
@@ -905,6 +990,13 @@ def tx_merge_parts(spark: SparkSession, table: str, source: DataFrame,
                 "plain reads reject - cast the source to the stored "
                 "dtypes first")
     parts: dict[str, str | None] = dict(_stage_parts(merged, table, part_col))
+    stray = sorted(set(parts) - set(touched))
+    if stray:
+        raise ValueError(
+            f"tx_merge_parts: the merge staged rows into partitions "
+            f"{stray} that the source does not touch; merge_fn must keep "
+            f"every row's {part_col!r} unchanged (publishing would drop "
+            "those partitions' existing rows)")
     # A touched partition the merge left EMPTY (every row deleted —
     # possible with a delete-capable merge_fn) stages no dir; mark it
     # null so replay resets it instead of resurrecting the old rows.
@@ -942,7 +1034,7 @@ def tx_diff_parts(spark: SparkSession, table: str, v_from: int,
         dirs = [d for v in changed for d in state.get(v, [])]
         if not dirs:
             return None
-        return spark.read.parquet(*[str(Path(table) / d) for d in dirs])
+        return _read_dirs(spark, table, dirs)
 
     old, new = read_side(pa), read_side(pb)
     if old is None and new is None:
@@ -951,7 +1043,7 @@ def tx_diff_parts(spark: SparkSession, table: str, v_from: int,
                    [d for ds in pa.values() for d in ds]
         if not any_dirs:
             raise FileNotFoundError(f"tx_diff_parts: {table} is empty")
-        base = spark.read.parquet(str(Path(table) / any_dirs[0])).limit(0)
+        base = _read_dirs(spark, table, any_dirs[:1]).limit(0)
         return base.select(F.lit("insert").alias("op"), "*").limit(0)
     if old is None:
         # nothing visible at v_from in the changed partitions: every
@@ -1013,20 +1105,12 @@ def tx_optimize_parts(spark: SparkSession, table: str, part_col: str,
     dirs = [d for ds in state.values() for d in ds]
     if not dirs:
         raise FileNotFoundError(f"tx_optimize_parts: {table} is empty")
-    df = spark.read.parquet(*[str(Path(table) / d) for d in dirs])
-
-    stage = f"{_DATA}/{uuid.uuid4().hex}"
-    (zorder_key(df, zorder_cols)
-     .withColumn(_PART, df[part_col].cast("string"))
-     .repartitionByRange(n_files, _PART, "_zkey")
-     .sortWithinPartitions(_PART, "_zkey")
-     .drop("_zkey")
-     .write.partitionBy(_PART).parquet(str(Path(table) / stage)))
-    from urllib.parse import unquote
-    parts: dict[str, str] = {}
-    for d in (Path(table) / stage).iterdir():
-        if d.name.startswith(f"{_PART}="):
-            parts[unquote(d.name.split("=", 1)[1])] = f"{stage}/{d.name}"
+    parts = _stage_parts(
+        _read_dirs(spark, table, dirs), table, part_col,
+        arrange=lambda tagged: (zorder_key(tagged, zorder_cols)
+                                .repartitionByRange(n_files, _PART, "_zkey")
+                                .sortWithinPartitions(_PART, "_zkey")
+                                .drop("_zkey")))
     return _publish(table, {"mode": "replace_parts", "pcol": part_col,
                             "parts": parts},
                     max_retries=10, txn_id=None, expect_latest=base)
@@ -1139,13 +1223,19 @@ def tx_materialize(spark: SparkSession, table: str,
         state = _visible_parts(table)
         stage = f"{_DATA}/{uuid.uuid4().hex}"
         parts: dict[str, str] = {}
+        schemas = set()
         for v, ds in sorted(state.items()):
             if not ds:
                 continue
             sub = f"{stage}/{_PART}={v}"
-            (spark.read.parquet(*[str(Path(table) / d) for d in ds])
-             .write.parquet(str(Path(table) / sub)))
+            part = _read_dirs(spark, table, ds)
+            part.write.parquet(str(Path(table) / sub))
             parts[v] = sub
+            schemas.add(part.schema.json())
+        if len(schemas) == 1:
+            # one sidecar serves every partition only when they agree
+            # (an evolved append leaves partitions with other columns)
+            _write_schema(Path(table) / stage, part.schema)
         pcol = next((e["pcol"] for e in
                      sorted(_entries(table), key=lambda e: -e["id"])
                      if "pcol" in e), None)
@@ -1155,10 +1245,8 @@ def tx_materialize(spark: SparkSession, table: str,
             payload["pcol"] = pcol
         return _publish(table, payload, max_retries,
                         txn_id=None, expect_latest=latest)
-    dirs = _visible_dirs(table)
-    stage = f"{_DATA}/{uuid.uuid4().hex}"
-    (spark.read.parquet(*[str(Path(table) / d) for d in dirs])
-     .write.parquet(str(Path(table) / stage)))
+    stage = _stage_write(_read_dirs(spark, table, _visible_dirs(table)),
+                         table)
     return _publish(table, {"mode": "overwrite", "dir": stage,
                             "materialized": True},
                     max_retries, txn_id=None, expect_latest=latest)

@@ -1,9 +1,11 @@
 """Differential-compare helpers mirroring the driver's oracle check:
-row-count + column names + order-insensitive exact value match."""
+row-count + column names + order-insensitive exact value match; and a
+Spark job counter."""
 
 from __future__ import annotations
 
 import datetime as _dt
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -83,3 +85,17 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame,
                 f"{name}: column {c!r} mismatches at rows {detail} "
                 f"({int((~eq).sum())} of {len(a)} rows differ)"
             )
+
+
+def count_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn launched)``: runs ``fn`` under a
+    fresh job group and counts the group's jobs."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

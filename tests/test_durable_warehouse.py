@@ -20,7 +20,10 @@ from library_data_warehouse_and_business_analytics_system_spark.plans.library im
     incremental as INC, initial_load,
 )
 from library_data_warehouse_and_business_analytics_system_spark.plans.library.durable import (
-    publish_warehouse, read_warehouse, subsequent_load_durable,
+    DIMS, publish_warehouse, read_warehouse, subsequent_load_durable,
+)
+from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
+    tx_latest_id,
 )
 
 
@@ -84,8 +87,15 @@ def test_durable_roundtrip_and_partition_scoped_load(spark, oltp, dw,
     delta = _delta(spark, oltp)
     before = _fact_digests(root, "fact_sales")
     before_borrow = _fact_digests(root, "fact_borrowing")
+    dims_before = {n: tx_latest_id(f"{root}/{n}") for n in DIMS}
 
     subsequent_load_durable(spark, root, oltp, delta, AS_OF)
+
+    # the delta's members rows advance dim_members alone; the other
+    # dims keep their commit (the manifest pins it again)
+    advanced = {n for n in DIMS
+                if tx_latest_id(f"{root}/{n}") != dims_before[n]}
+    assert advanced == {"dim_members"}
 
     # equivalence with the in-memory pipeline on the same inputs
     want = INC.subsequent_load(spark, dw, oltp, delta, AS_OF)

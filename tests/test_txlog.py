@@ -522,3 +522,85 @@ def test_tx_history(spark, tmp_path):
     h = TX.tx_history(t)
     assert h[-1]["operation"] == "checkpoint-horizon"
     assert [r["id"] for r in h[:-1]] == [3]
+
+
+def _wide(spark, ids, year=2020):
+    """Rows covering the types a schema sidecar must round-trip:
+    decimal(38,6), date, timestamp, array<float>, struct and a NOT
+    NULL column."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql.types import (
+        ArrayType, DateType, DecimalType, FloatType, IntegerType, LongType,
+        StringType, StructField, StructType, TimestampType,
+    )
+
+    schema = StructType([
+        StructField("id", LongType(), False),
+        StructField("yr", IntegerType(), False),
+        StructField("amt", DecimalType(38, 6)),
+        StructField("day", DateType()),
+        StructField("at", TimestampType()),
+        StructField("vec", ArrayType(FloatType(), False)),
+        StructField("tag", StructType([StructField("k", StringType(), False),
+                                       StructField("n", IntegerType())])),
+    ])
+    return spark.createDataFrame(
+        [(i, year, Decimal(i) / 7, dt.date(2020, 1, 1 + i % 28),
+          dt.datetime(2020, 1, 1, i % 24), [float(i), 0.5], (f"k{i}", i))
+         for i in ids], schema)
+
+
+def _dir_paths(t: str) -> list[str]:
+    return [str(Path(t) / d) for d in txlog._visible_dirs(t)]
+
+
+def _rows(df):
+    return sorted(df.collect(), key=lambda r: r.id)
+
+
+def test_read_uses_schema_sidecar_and_launches_no_job(spark, tmp_path):
+    """A table written by tx_write reads with the schema its sidecar
+    recorded: no inference job, and the same schema and rows as the
+    footer-inferred read."""
+    from .helpers import count_jobs
+
+    t = str(tmp_path / "t")
+    tx_write(_wide(spark, [1, 2]), t)
+    tx_write(_wide(spark, [3]), t)
+    assert (Path(t) / txlog._visible_dirs(t)[0] / "_schema.json").is_file()
+    df, jobs = count_jobs(spark, lambda: tx_read(spark, t))
+    assert jobs == 0
+    inferred = spark.read.parquet(*_dir_paths(t))
+    assert df.schema == inferred.schema
+    assert not any(f.nullable is False for f in df.schema.fields)
+    assert _rows(df) == _rows(inferred)
+
+
+@pytest.mark.parametrize("case", ["no_sidecar", "merge_schema",
+                                  "evolved_append"])
+def test_read_falls_back_to_inference(spark, tmp_path, case):
+    """Reads that cannot trust one sidecar infer the schema from the
+    footers as before: a dir staged without a sidecar, a
+    merge_schema read, and an append that added a column."""
+    from .helpers import count_jobs
+
+    t = str(tmp_path / "t")
+    tx_write(_wide(spark, [1, 2]), t)
+    if case == "evolved_append":
+        from pyspark.sql import functions as F
+        tx_write(_wide(spark, [3]).withColumn("note", F.lit("x")), t)
+    else:
+        tx_write(_wide(spark, [3]), t)
+    if case == "no_sidecar":
+        (Path(t) / txlog._visible_dirs(t)[1] / "_schema.json").unlink()
+    merge = case == "merge_schema"
+    df, jobs = count_jobs(spark, lambda: tx_read(spark, t,
+                                                 merge_schema=merge))
+    assert jobs > 0
+    reader = spark.read.option("mergeSchema", "true") if merge \
+        else spark.read
+    inferred = reader.parquet(*_dir_paths(t))
+    assert df.schema == inferred.schema
+    assert _rows(df) == _rows(inferred)

@@ -615,3 +615,126 @@ def test_maintenance_cycle_reclaims_superseded_generations(spark, tmp_path):
     assert got == want == sorted(
         [(1, 2019, 15.0), (2, 2019, 20.0), (3, 2020, 35.0),
          (4, 2021, 40.0)])
+
+
+def _part_paths(t: str) -> list[str]:
+    return [str(Path(t) / d)
+            for ds in txlog._visible_parts(t).values() for d in ds]
+
+
+def test_parts_reads_use_schema_sidecar_and_launch_no_job(spark, tmp_path):
+    """Tables written by tx_write_parts and tx_merge_parts read with
+    their sidecar schema — tx_read_parts and a manifest-pinned
+    read_consistent launch no Spark job — and match the
+    footer-inferred read's schema and rows."""
+    from library_data_warehouse_and_business_analytics_system_spark.sources.txmulti import (
+        publish_manifest, read_consistent, snapshot_current,
+    )
+
+    from .helpers import count_jobs
+    from .test_txlog import _rows, _wide
+
+    root = tmp_path / "wh"
+    t = str(root / "fact")
+    tx_write_parts(_wide(spark, [1, 2], 2019).unionByName(
+        _wide(spark, [3], 2020)), t, "yr", mode="overwrite")
+    tx_merge_parts(spark, t, _wide(spark, [3, 4], 2020), keys=["id"],
+                   part_col="yr")
+    tx_write(_wide(spark, [7]), str(root / "dim"), mode="overwrite")
+    publish_manifest(str(root), snapshot_current(str(root),
+                                                 ["dim", "fact"]))
+
+    df, jobs = count_jobs(spark, lambda: tx_read_parts(spark, t))
+    assert jobs == 0
+    inferred = spark.read.parquet(*_part_paths(t))
+    assert df.schema == inferred.schema
+    assert _rows(df) == _rows(inferred)
+    assert [r.id for r in _rows(df)] == [1, 2, 3, 4]
+
+    got, jobs = count_jobs(spark, lambda: read_consistent(
+        spark, str(root), ["dim"], ["fact"]))
+    assert jobs == 0
+    assert got["fact"].schema == inferred.schema
+    assert _rows(got["dim"]) == _rows(_wide(spark, [7]))
+
+
+@pytest.mark.parametrize("case", ["no_sidecar", "merge_schema",
+                                  "evolved_append"])
+def test_parts_read_falls_back_to_inference(spark, tmp_path, case):
+    """Partitioned twin of the plain fall-back cases: a stage without
+    its sidecar, merge_schema, and an append that added a column all
+    read exactly as the footer-inferred read."""
+    from pyspark.sql import functions as F
+
+    t = str(tmp_path / "t")
+    tx_write_parts(_orders(spark, [(1, 2019, 1.0), (2, 2020, 2.0)]), t,
+                   "o_year")
+    later = _orders(spark, [(3, 2020, 3.0)])
+    if case == "evolved_append":
+        later = later.withColumn("note", F.lit("x"))
+    tx_write_parts(later, t, "o_year", mode="append")
+    if case == "no_sidecar":
+        first = txlog._visible_parts(t)["2019"][0]
+        (Path(t) / first).parent.joinpath("_schema.json").unlink()
+    merge = case == "merge_schema"
+    df = tx_read_parts(spark, t, merge_schema=merge)
+    reader = spark.read.option("mergeSchema", "true") if merge \
+        else spark.read
+    inferred = reader.parquet(*_part_paths(t))
+    assert df.schema == inferred.schema
+    key = lambda r: r.o_orderkey  # noqa: E731
+    assert sorted(df.collect(), key=key) == \
+        sorted(inferred.collect(), key=key)
+
+
+def test_merge_parts_rejects_rows_moved_to_untouched_partition(spark,
+                                                               tmp_path):
+    """merge_fn must keep every row's part_col: a merge that stages a
+    row into a partition the source does not touch raises before the
+    publish (replace_parts would drop that partition's existing rows),
+    and the table is left as it was."""
+    from pyspark.sql import functions as F
+
+    t = str(tmp_path / "orders")
+    tx_write_parts(_orders(spark, [(1, 2019, 1.0), (2, 2020, 2.0),
+                                   (3, 2021, 3.0)]),
+                   t, "o_year", mode="overwrite")
+    before_id = txlog.tx_latest_id(t)
+    before = sorted(tx_read_parts(spark, t).collect())
+
+    def shift(cur, src):   # moves order 2 from 2020 into 2021
+        return cur.unionByName(src).withColumn(
+            "o_year", F.when(F.col("o_orderkey") == 2, F.lit(2021))
+            .otherwise(F.col("o_year")))
+
+    with pytest.raises(ValueError, match="2021"):
+        tx_merge_parts(spark, t, _orders(spark, [(4, 2020, 4.0)]),
+                       keys=["o_orderkey"], part_col="o_year",
+                       merge_fn=shift)
+    assert txlog.tx_latest_id(t) == before_id
+    assert sorted(tx_read_parts(spark, t).collect()) == before
+
+
+def test_merge_parts_evaluates_source_once(spark, tmp_path):
+    """The merge materialises its source once: a Python UDF in the
+    source runs once per source row, not once for the touched-
+    partition scan and again for the staged write."""
+    from pyspark.sql import functions as F
+
+    t = str(tmp_path / "orders")
+    tx_write_parts(_orders(spark, [(1, 2019, 1.0), (2, 2020, 2.0)]), t,
+                   "o_year", mode="overwrite")
+    calls = spark.sparkContext.accumulator(0)
+
+    def bump(year):
+        calls.add(1)
+        return year
+
+    # on the partition column, so the touched-partition scan needs it
+    src = _orders(spark, [(2, 2020, 9.0), (5, 2021, 5.0)]).withColumn(
+        "o_year", F.udf(bump, "int")("o_year"))
+    tx_merge_parts(spark, t, src, keys=["o_orderkey"], part_col="o_year")
+    assert calls.value == 2
+    assert {(r.o_orderkey, r.o_total)
+            for r in tx_read_parts(spark, t).collect()} == \
+        {(1, 1.0), (2, 9.0), (5, 5.0)}
