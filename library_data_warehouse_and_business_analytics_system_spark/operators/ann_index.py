@@ -50,6 +50,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.vectors import cosine_from_norms, dot, l2_norm_sq
 from ..sources.txlog import (
@@ -136,11 +137,12 @@ def _write_centroids(cent_t: str, cents: list[list[float]]) -> int:
     parameter-server-sized data. Same txlog protocol as tx_write
     (stage dir first, then the atomic log-entry link); Spark reads
     the pyarrow-written parquet identically (int32 cell,
-    list<double> centroid ≡ cell int, centroid array<double>)."""
+    list<double> centroid ≡ cell int, centroid array<double>). The
+    dir carries txlog's schema sidecar like any Spark-staged one."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..sources.txlog import _DATA, _publish
+    from ..sources.txlog import _DATA, _publish, _write_schema
 
     stage = f"{_DATA}/{uuid.uuid4().hex}"
     d = Path(cent_t) / stage
@@ -151,6 +153,9 @@ def _write_centroids(cent_t: str, cents: list[list[float]]) -> int:
                              pa.list_(pa.float64())),
     })
     pq.write_table(tbl, d / "part-00000.parquet")
+    _write_schema(d, T.StructType([
+        T.StructField("cell", T.IntegerType()),
+        T.StructField("centroid", T.ArrayType(T.DoubleType()))]))
     return _publish(cent_t, {"mode": "overwrite", "dir": stage},
                     max_retries=10, txn_id=None, expect_latest=None)
 
@@ -170,12 +175,13 @@ def _reset_deletes(del_t: str, id_dtype: str, spark: SparkSession,
     """Overwrite the deletes table with an EMPTY generation (rebuild
     folds tombstones away physically). Zero-row data needs no
     executor: stage an empty parquet with the id schema driver-side
-    and publish it through the same txlog protocol (r13, guide §1.2).
-    Falls back to the Spark write for id dtypes outside the map."""
+    and publish it through the same txlog protocol (r13, guide §1.2),
+    schema sidecar included. Falls back to the Spark write for id
+    dtypes outside the map."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..sources.txlog import _DATA, _publish
+    from ..sources.txlog import _DATA, _publish, _write_schema
 
     pa_name = _PA_ID_TYPES.get(id_dtype)
     if pa_name is None:  # pragma: no cover - exotic id types
@@ -187,6 +193,8 @@ def _reset_deletes(del_t: str, id_dtype: str, spark: SparkSession,
     d.mkdir(parents=True, exist_ok=True)
     tbl = pa.table({"id": pa.array([], getattr(pa, pa_name)())})
     pq.write_table(tbl, d / "part-00000.parquet")
+    _write_schema(d, T.StructType(
+        [T.StructField("id", corpus.schema[id_col].dataType)]))
     _publish(del_t, {"mode": "overwrite", "dir": stage},
              max_retries=10, txn_id=None, expect_latest=None)
 
@@ -435,7 +443,6 @@ def ann_index_query(spark: SparkSession, root: str, queries: DataFrame,
     avail = set(tx_part_values(asg_t))
     probed = [c for c in probed if str(c) in avail]
     if not probed:
-        from pyspark.sql import types as T
         id_t = queries.schema[id_col].dataType
         return spark.createDataFrame([], T.StructType([
             T.StructField("query_id", id_t),

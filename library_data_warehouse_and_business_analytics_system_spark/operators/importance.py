@@ -79,8 +79,10 @@ def dsir_importance(docs: DataFrame, target_pred: Column,
     frame; the only data-sized shuffles are the (doc, bucket) partial
     aggregates. Returns (doc_id, is_target, n_feats, score)."""
     feats = hashed_ngram_features(docs, n_buckets, id_col, text_col, salt)
+    # Distinct: a doc_id repeated among the target rows would fan out
+    # both doc-keyed joins below (feats already merges its rows).
     target_ids = docs.filter(target_pred).select(
-        F.col(id_col).alias("doc_id"))
+        F.col(id_col).alias("doc_id")).distinct()
 
     # BOTH distribution tables from ONE pass over feats (r14, guide
     # §2.4): the raw/tgt pair evaluated the tokenize+hash+explode

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_from_norms, dot, l2_norm_sq
+from ..sources.catalog import read_parquet
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, vec_col: str,
@@ -315,7 +316,7 @@ def save_centroids(spark, centroids: list[list[float]], path: str) -> None:
 def load_centroids(spark, path: str) -> list[list[float]]:
     """Load a quantizer saved by :func:`save_centroids`, in cell
     order, ready to pass to ``ivf_topk(centroids=...)``."""
-    rows = spark.read.parquet(path).orderBy("cell").collect()
+    rows = read_parquet(spark, path).orderBy("cell").collect()
     assert [r.cell for r in rows] == list(range(len(rows))), \
         "centroid file is missing cells or has duplicates"
     return [list(r.centroid) for r in rows]

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
+from ..sources.catalog import read_parquet
 from .library import (query1, query1_subtotals, query2, query2_subtotals,
                       query3, query3_subtotals)
 from .registry import register
@@ -36,7 +37,7 @@ _DW_TABLES = ("dim_date", "dim_book", "dim_members", "dim_suppliers",
 
 
 def load_warehouse(spark: SparkSession) -> dict[str, DataFrame]:
-    return {t: spark.read.parquet(str(FIXTURE_DIR / f"{t}.parquet"))
+    return {t: read_parquet(spark, str(FIXTURE_DIR / f"{t}.parquet"))
             for t in _DW_TABLES}
 
 

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from ..functions import text as TX
 from ..functions.vectors import cosine
 from ..operators import dedup, similarity
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, read_parquet
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -1582,7 +1582,7 @@ def _pii_oracle_sql() -> str:
     operators=("PII-SCRUB", "P1"),
 )
 def pii_scrub_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(str(_PII_FIXTURE))
+    docs = read_parquet(spark, str(_PII_FIXTURE))
     return (
         docs.select("doc_id",
                     TX.scrub_pii(F.col("text")).alias("scrubbed"),

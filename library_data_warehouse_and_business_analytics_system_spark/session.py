@@ -50,6 +50,14 @@ ENGINE_CONFS: dict[str, str] = {
 
 
 import contextlib
+import threading
+
+_AQE = "spark.sql.adaptive.enabled"
+#: Guards the open ``no_aqe`` windows: how many are open and the AQE
+#: flag the first one found.
+_aqe_lock = threading.Lock()
+_aqe_depth = 0
+_aqe_saved: str | None = None
 
 
 @contextlib.contextmanager
@@ -63,14 +71,25 @@ def no_aqe(spark: SparkSession):
     fixpoint's per-round join reuses the one exchange the checkpoint
     already paid. Scope the toggle to the checkpoint's own
     materialization — everything else still runs under AQE. This is
-    partition PLACEMENT only; row values are unchanged at any scale."""
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
+    partition PLACEMENT only; row values are unchanged at any scale.
+
+    Safe to nest and to enter from several threads: the flag is
+    session-global, so the first open window saves it and the last
+    one to close restores it. Queries other threads plan while any
+    window is open also run without AQE — again placement only."""
+    global _aqe_depth, _aqe_saved
+    with _aqe_lock:
+        if _aqe_depth == 0:
+            _aqe_saved = spark.conf.get(_AQE)
+            spark.conf.set(_AQE, "false")
+        _aqe_depth += 1
     try:
         yield
     finally:
-        spark.conf.set(key, prev)
+        with _aqe_lock:
+            _aqe_depth -= 1
+            if _aqe_depth == 0:
+                spark.conf.set(_AQE, _aqe_saved)
 
 
 def get_spark(app_name: str = "library-dwh-spark", master: str | None = None,

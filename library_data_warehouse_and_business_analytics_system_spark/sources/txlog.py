@@ -31,8 +31,8 @@ Layout::
   the written frame's schema with every field nullable. Reads pass it
   to ``spark.read.schema`` and skip the footer-inference job. They
   fall back to inference when any visible dir lacks a sidecar (dirs
-  staged before sidecars existed, or by pyarrow), when the visible
-  dirs' sidecars differ (an append that evolved the schema), and for
+  staged before sidecars existed), when the visible dirs' sidecars
+  differ (an append that evolved the schema), and for
   ``merge_schema=True``. A logged dir never changes, so its sidecar
   travels with it through checkpoint, truncate, restore and shallow
   clone, and vacuum removes it along with the dir.

@@ -470,3 +470,39 @@ def test_query_over_empty_probed_cells_returns_empty(spark, sf_dir,
     full = ann_index_query(spark, root, probe_q, "vec_id", "embedding",
                            k=5, n_probe=_CELLS)
     assert full.count() > 0
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
+def test_driver_staged_dirs_carry_schema_sidecars(spark, tmp_path, id_type):
+    """The pyarrow-staged centroid and deletes dirs carry txlog's
+    schema sidecar: after a rebuild, reading either table launches no
+    job and yields the footer-inferred schema."""
+    from pathlib import Path
+
+    from library_data_warehouse_and_business_analytics_system_spark.operators.ann_index import (
+        _deletes_table, _tables, ann_index_delete,
+    )
+    from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
+        _visible_dirs, tx_read,
+    )
+
+    from .helpers import count_jobs
+
+    corpus = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 5), 0.5]) for i in range(24)],
+        "vec_id int, embedding array<double>").select(
+        F.col("vec_id").cast(id_type).alias("vec_id"), "embedding")
+    root = str(tmp_path / "idx")
+    ann_index_build(spark, corpus, "vec_id", "embedding", root,
+                    dim=4, n_cells=2, max_iter=2, seed=7)
+    ann_index_delete(spark, root, corpus.filter(F.col("vec_id") == 3),
+                     "vec_id")
+    ann_index_build(spark, corpus, "vec_id", "embedding", root,
+                    dim=4, n_cells=2, max_iter=2, seed=7)
+    for t in (_tables(root)[0], _deletes_table(root)):
+        df, jobs = count_jobs(spark, lambda: tx_read(spark, t))
+        assert jobs == 0, t
+        inferred = spark.read.parquet(
+            *[str(Path(t) / d) for d in _visible_dirs(t)])
+        assert df.schema == inferred.schema, t
+    assert tx_read(spark, _deletes_table(root)).count() == 0

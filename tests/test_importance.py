@@ -94,3 +94,32 @@ def test_score_is_deterministic_across_partitionings(docs):
     l, r = (sorted(x.collect(), key=lambda t: t["doc_id"])
             for x in (one, many))
     assert l == r
+
+
+def test_repeated_target_doc_id_counts_each_feature_once(spark):
+    """A doc_id repeated among the target rows must not fan out the
+    doc-keyed target joins: raw_n/tgt_n (and so every score) equal a
+    plain pandas count over the same feature rows, one row per doc."""
+    df = spark.createDataFrame(
+        [(1, "alpha beta", "tgt"), (1, "gamma beta", "tgt"),
+         (2, "alpha gamma", "raw"), (3, "beta delta alpha", "tgt")],
+        ["doc_id", "text", "style"])
+    n_buckets = 1 << 16
+    feats = hashed_ngram_features(df, n_buckets=n_buckets).toPandas()
+    is_tgt = feats["doc_id"].isin([1, 3])
+    raw_n = feats.groupby("bucket")["cnt"].sum()
+    tgt_n = (feats[is_tgt].groupby("bucket")["cnt"].sum()
+             .reindex(raw_n.index, fill_value=0))
+    c = ((raw_n.sum() + n_buckets) / (tgt_n.sum() + n_buckets))
+    ratio = (tgt_n + 1) / (raw_n + 1)
+    expected = {
+        d: c * sum(cnt * ratio[b] for b, cnt in
+                   sorted(zip(g["bucket"], g["cnt"])))
+        for d, g in feats.groupby("doc_id")}
+
+    out = dsir_importance(df, F.col("style") == "tgt",
+                          n_buckets=n_buckets).collect()
+    assert sorted(r["doc_id"] for r in out) == [1, 2, 3]
+    for r in out:
+        assert r["is_target"] == (r["doc_id"] in (1, 3))
+        assert r["score"] == pytest.approx(expected[r["doc_id"]], rel=1e-12)
