@@ -21,6 +21,16 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def sq_dist(a: Column, b: Column) -> Column:
+    """Squared L2 distance Σ (aᵢ − bᵢ)² in double precision."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
+                   * (x.cast("double") - y.cast("double"))),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
 def l2_norm_sq(a: Column) -> Column:
     return F.aggregate(
         F.transform(a, lambda x: x.cast("double") * x.cast("double")),

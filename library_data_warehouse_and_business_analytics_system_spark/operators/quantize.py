@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.vectors import cosine_from_norms, dot, l2_norm_sq, sq_dist
+from .clustering import _books_frame, lloyd, lowest_id_init
+
 
 def quantize_int8(df: DataFrame, vec_col: str,
                   q_col: str = "qvec", scale_col: str = "scale") -> DataFrame:
@@ -48,11 +51,6 @@ def int8_cosine(qa: Column, qb: Column) -> Column:
     ``spark.sql.ansi.enabled`` (ADVICE r5). Mirrors the zero-vector
     handling in :func:`quantize_int8`.
     """
-    def dot(a: Column, b: Column) -> Column:
-        return F.aggregate(F.zip_with(a, b,
-                                      lambda x, y: x.cast("double")
-                                      * y.cast("double")),
-                           F.lit(0.0), lambda acc, x: acc + x)
     norm = F.sqrt(dot(qa, qa) * dot(qb, qb))
     return F.when(norm > 0, dot(qa, qb) / norm)
 
@@ -71,106 +69,27 @@ def int8_cosine(qa: Column, qb: Column) -> Column:
 # all JVM expression tree, no Python, no UDF.
 
 
-def _books_frame(spark, codebooks: list[list[list[float]]]):
-    """The m × ksub × dsub codebook tensor as a ONE-ROW broadcast
-    frame (column ``_books``). The previous literal-expression form
-    (one ``F.array(F.lit(...))`` per centroid) put m·ksub·dsub ≈ 2000
-    Literal nodes through the analyzer for encode + distance-table
-    alone — seconds of driver-side plan time per query (guide §7.3
-    "very large plans"); as data the codebook costs one KB-sized
-    broadcast and the fold arithmetic is unchanged (measured at
-    sf0.1: pq_topk 7.0 s → 2.5 s, output bit-identical)."""
-    return F.broadcast(spark.createDataFrame(
-        [(codebooks,)], "_books array<array<array<double>>>"))
-
-
 def pq_fit(corpus: DataFrame, vec_col: str, dim: int, m: int = 4,
            ksub: int = 16, iters: int = 4,
            id_col: str = "vec_id") -> list[list[list[float]]]:
     """Train m per-subspace codebooks (ksub × dim/m each): Lloyd's
-    with lowest-id init — ALL subspaces in one pass per iteration.
+    under squared L2 with lowest-id init — ALL subspaces in one pass
+    per iteration.
 
-    The corpus explodes once into (vec_id, subspace, subvector); each
-    iteration is ONE job: broadcast the m·ksub centroid table keyed
-    by subspace, struct-min assignment (ties → lowest code), then a
-    (subspace, cell, dim)-keyed decimal-exact mean whose output is
-    m·ksub·dsub rows regardless of corpus size. iters+2 Spark jobs
-    total — the per-subspace-sequential formulation costs m·iters·2
-    jobs for identical math, pure scheduling overhead at any scale.
-    Decimal sums make centroids independent of partition/merge order;
-    empty cells keep their previous centroid (Lloyd's convention)."""
+    The corpus explodes into (subspace, subvector) rows and
+    :func:`clustering.lloyd` trains every subspace at once: the
+    per-subspace-sequential formulation costs m·iters·2 jobs for
+    identical math, pure scheduling overhead at any scale. Decimal
+    sums make codebooks independent of partition/merge order; empty
+    cells keep their previous centroid (Lloyd's convention)."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     dsub = dim // m
-    spark = corpus.sparkSession
-    subs = corpus.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(F.array(*[
-            F.slice(F.col(vec_col), j * dsub + 1, dsub)
-            for j in range(m)])).alias("j", "sv")).cache()
-
-    # Collects run under no_aqe (r14, guide §1.2): AQE materializes
-    # every shuffle stage as its own Spark job, so the training loop
-    # paid 3-4 job round-trips per iteration for fixed-width
-    # aggregations AQE cannot improve (reduce output is m·ksub·dsub
-    # rows by construction; the only join is explicitly broadcast).
-    # Values are exact decimal sums / struct-mins either way.
-    from ..session import no_aqe
-
-    w = Window.partitionBy("j").orderBy("vid")
-    with no_aqe(spark):
-        init = (subs.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= ksub)
-                .select("j", (F.col("rn") - 1).alias("cell"), "sv")
-                .collect())
-    cents: dict[tuple[int, int], list[float]] = {
-        (r["j"], r["cell"]): [float(x) for x in r["sv"]] for r in init}
-    if len(cents) < m * ksub:
-        raise ValueError(
-            f"corpus has fewer than ksub={ksub} vectors to seed from")
-
-    for _ in range(iters):
-        cdf = F.broadcast(spark.createDataFrame(
-            [(j, c, v) for (j, c), v in sorted(cents.items())],
-            "j int, cell int, cvec array<double>"))
-        cand = F.struct(_sq_dist(F.col("sv"), F.col("cvec")).alias("d"),
-                        F.col("cell").alias("cell"))
-        assigned = (
-            subs.join(cdf, "j")
-            .select("vid", "j", "sv", cand.alias("cand"))
-            .groupBy("vid", "j")
-            .agg(F.min("cand").alias("best"), F.first("sv").alias("sv"))
-        )
-        per_dim_q = (
-            assigned.select("j", F.col("best.cell").alias("cell"),
-                            F.posexplode("sv").alias("i", "x"))
-            .groupBy("j", "cell", "i")
-            .agg(F.sum(F.col("x").cast("decimal(28,12)")).alias("s"),
-                 F.count(F.lit(1)).alias("n"))
-            .select("j", "cell", "i",
-                    (F.col("s") / F.col("n")).cast("double").alias("mu"))
-        )
-        with no_aqe(spark):
-            per_dim = per_dim_q.collect()
-        new = dict(cents)  # empty cells keep their previous centroid
-        acc: dict[tuple[int, int], dict[int, float]] = {}
-        for r in per_dim:
-            acc.setdefault((r["j"], r["cell"]), {})[r["i"]] = r["mu"]
-        for key, dims in acc.items():
-            vec = list(new[key])
-            for i, mu in dims.items():
-                vec[i] = mu
-            new[key] = vec
-        cents = new
-    subs.unpersist()
-    return [[cents[(j, c)] for c in range(ksub)] for j in range(m)]
-
-
-def _sq_dist(a: Column, b: Column) -> Column:
-    """Squared L2 between two array columns, folded in index order."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, v: acc + v)
+    subs = corpus.select(F.posexplode(F.array(*[
+        F.slice(F.col(vec_col), j * dsub + 1, dsub)
+        for j in range(m)])).alias("j", "v"))
+    return lloyd(subs, lowest_id_init(corpus, id_col, vec_col, ksub, m),
+                 iters, sq_dist)
 
 
 def pq_encode(df: DataFrame, vec_col: str,
@@ -186,7 +105,7 @@ def pq_encode(df: DataFrame, vec_col: str,
         lambda j: F.array_min(F.transform(
             F.sequence(F.lit(0), F.lit(ksub - 1)),
             lambda ci: F.struct(
-                _sq_dist(F.slice(F.col(vec_col), j * dsub + 1, dsub),
+                sq_dist(F.slice(F.col(vec_col), j * dsub + 1, dsub),
                          F.element_at(
                              F.element_at(F.col("_books"), j + 1),
                              ci + 1)).alias("d"),
@@ -208,8 +127,6 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, vec_col: str,
 
     Returns (query_id, neighbor_id, rank) — plus ``cos`` when
     reranking, ``adc`` otherwise."""
-    from ..functions.vectors import cosine_from_norms, dot, l2_norm_sq
-
     m = len(codebooks)
     ksub = len(codebooks[0])
     dsub = len(codebooks[0][0])
@@ -223,7 +140,7 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, vec_col: str,
             F.sequence(F.lit(0), F.lit(m - 1)),
             lambda j: F.transform(
                 F.sequence(F.lit(0), F.lit(ksub - 1)),
-                lambda ci: _sq_dist(
+                lambda ci: sq_dist(
                     F.slice(qv, j * dsub + 1, dsub),
                     F.element_at(F.element_at(F.col("_books"), j + 1),
                                  ci + 1))))

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_from_norms, dot, l2_norm_sq
 from ..sources.catalog import read_parquet
+from .clustering import lloyd
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, vec_col: str,
@@ -186,53 +187,22 @@ def lsh_topk_auto(corpus: DataFrame, queries: DataFrame, vec_col: str,
 def kmeans_fit(corpus: DataFrame, vec_col: str, dim: int, k: int = 8,
                max_iter: int = 5, seed: int = 42) -> list[list[float]]:
     """Distributed spherical k-means for the IVF coarse quantizer:
-    seeded random init, then Lloyd iterations — assign each vector to
-    its max-dot centroid, recompute centroids as per-cell means.
+    seeded random init, then ``max_iter`` rounds of
+    :func:`clustering.lloyd` scoring by max dot product — assign each
+    vector to its max-dot centroid, recompute centroids as per-cell
+    means.
 
-    Scale shape: the update step is posexplode(vector) →
-    groupBy(cell, dim) with map-side partial aggregation — shuffle
-    volume O(partitions · k · dim), never the corpus; only the k×dim
-    centroid matrix ever reaches the driver (parameter-server style,
-    re-broadcast as literals each round).
+    Scale shape: only the k×dim centroid matrix ever reaches the
+    driver (parameter-server style); each round it travels back as one
+    broadcast row, never the corpus.
 
     Determinism: per-dimension sums run in DECIMAL, so the result is
     exact and independent of partition/merge order — float summation
     would make centroid values (and therefore assignments) vary run to
     run. Empty cells keep their previous centroid."""
-    from ..session import no_aqe
-
-    cents = _seeded_planes(dim, k, seed)
-    for _ in range(max_iter):
-        assigned = corpus.crossJoin(
-            cents_frame(corpus.sparkSession, cents)).select(
-            F.col(vec_col).alias("v"),
-            _nearest_cells(F.col(vec_col), k, 1)[0].cell.alias("cell"))
-        per_dim = (
-            assigned.select("cell", F.posexplode("v").alias("i", "x"))
-            .groupBy("cell", "i")
-            .agg(F.sum(F.col("x").cast("decimal(28,12)")).alias("s"),
-                 F.count(F.lit(1)).alias("n"))
-            .select("cell", "i",
-                    (F.col("s") / F.col("n")).cast("double").alias("m"))
-        )
-        # One Spark JOB per iteration instead of three (r14, guide
-        # §1.2): under AQE every shuffle stage materializes as its own
-        # job, so each Lloyd round paid 3 job-scheduling round-trips
-        # for one fixed-width aggregation. AQE has nothing to offer
-        # here — the reduce side is k×dim rows by construction (no
-        # skew, nothing to coalesce but empty partitions), values are
-        # exact decimal sums either way.
-        with no_aqe(corpus.sparkSession):
-            rows = per_dim.collect()
-        new_cents = [list(c) for c in cents]
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_cell.setdefault(r["cell"], {})[r["i"]] = r["m"]
-        for cell, dims in by_cell.items():
-            for i, m in dims.items():
-                new_cents[cell][i] = m
-        cents = new_cents
-    return cents
+    points = corpus.select(F.lit(0).alias("j"), F.col(vec_col).alias("v"))
+    return lloyd(points, [_seeded_planes(dim, k, seed)], max_iter,
+                 lambda v, c: -dot(v, c))[0]
 
 
 def cents_frame(spark, cents: list[list[float]]):
@@ -317,8 +287,9 @@ def load_centroids(spark, path: str) -> list[list[float]]:
     """Load a quantizer saved by :func:`save_centroids`, in cell
     order, ready to pass to ``ivf_topk(centroids=...)``."""
     rows = read_parquet(spark, path).orderBy("cell").collect()
-    assert [r.cell for r in rows] == list(range(len(rows))), \
-        "centroid file is missing cells or has duplicates"
+    if [r.cell for r in rows] != list(range(len(rows))):
+        raise ValueError(f"centroid file {path} is missing cells or has "
+                         "duplicates")
     return [list(r.centroid) for r in rows]
 
 

@@ -201,6 +201,30 @@ def test_kmeans_fit_is_deterministic(emb):
     assert c1 == c2
 
 
+def test_kmeans_fit_empty_cell_keeps_its_centroid(spark):
+    """Identical vectors all join one cell; the other cells win no
+    vector and keep their seeded centroids."""
+    from library_data_warehouse_and_business_analytics_system_spark.operators.similarity import (
+        _seeded_planes,
+    )
+    df = spark.createDataFrame([(i, [1.0, 0.0]) for i in range(4)],
+                               "vec_id long, embedding array<double>")
+    seeds = _seeded_planes(2, 3, 42)
+    won = max(range(3), key=lambda c: (seeds[c][0], -c))
+    got = similarity.kmeans_fit(df, "embedding", dim=2, k=3, max_iter=2)
+    assert got == [[1.0, 0.0] if c == won else seeds[c] for c in range(3)]
+
+
+def test_load_centroids_rejects_missing_cell(spark, tmp_path):
+    p = str(tmp_path / "ivf_index")
+    spark.createDataFrame(
+        [(0, [1.0, 0.0]), (2, [0.0, 1.0])],
+        "cell int, centroid array<double>").coalesce(1) \
+        .write.parquet(p)
+    with pytest.raises(ValueError, match="missing cells"):
+        similarity.load_centroids(spark, p)
+
+
 @pytest.mark.slow  # opt-in lane (r14): endurance/equivalence run
 def test_trained_ivf_beats_random_on_clustered_vectors(spark):
     """On clustered data (IVF's target regime) Lloyd-trained centroids

@@ -172,68 +172,33 @@ def test_aggregates_have_partial_phase(plans):
         assert p.count("HashAggregate") >= 2, name
 
 
-def test_registry_gate_ordering():
-    """The driver's correctness gate truncates at 50 rows (observed in
-    round 1), so the registry order IS the rotation schedule. Round-14
-    plan (r13 verdict item 2): the 8 queries the r13 optimization
-    round REWROTE after their gate rows were scheduled gate first (the
-    driver confirms the rewrites), then 42 rotation slots (the whole
-    remaining 34-row r10 cohort + 8 r11-cohort rows FIFO, stalest
-    first). The green-set cutoff derives from the SAME module that
-    encodes the window (plans.WINDOW_ROUND), so the two cannot drift
-    apart (the r8/r9 stale-constant bug class): artifacts from the
-    window's own round and later are its output, not its planning
-    input, and are excluded."""
-    from library_data_warehouse_and_business_analytics_system_spark.plans import (
-        _R10_GREEN,
-        _R11_GREEN,
-        _R14_REWRITTEN,
-        _R14_WINDOW,
-        _R15_FRONT,
-        WINDOW_ROUND,
-    )
-
-    names = list(QUERIES)
-    # the committed window is exactly the first 50 registry entries
-    assert names[:50] == _R14_WINDOW
-    assert len(_R14_WINDOW) == 50
-    assert _R14_WINDOW[:8] == _R14_REWRITTEN
-    # round-close registrations pinned immediately after the window,
-    # fronting the next round (the _R9_FRONT/_R10_FRONT convention);
-    # none yet this round
-    assert names[50:50 + len(_R15_FRONT)] == _R15_FRONT
-    # green rows recorded by rounds BEFORE the window's round (later
-    # artifacts are this window's own output, not planning input)
+def test_registry_order_is_registration_order():
+    """The registry order is the order the plan modules register in:
+    two fresh interpreters, under different hash seeds, list the same
+    names in the same order, with no name twice."""
     import json
+    import os
+    import subprocess
+    import sys
     from pathlib import Path
 
     repo = Path(__file__).resolve().parents[1]
-    green: set[str] = set()
-    last_green: dict[str, int] = {}
-    artifacts = [p for p in repo.glob("CORRECTNESS_r*.json")
-                 if int(p.stem.split("_r")[1]) < WINDOW_ROUND]
-    for f in artifacts:
-        rnd = int(f.stem.split("_r")[1])
-        for q, r in json.load(open(f)).items():
-            if (r.get("rows_match") and r.get("schema_match")
-                    and r.get("hash_match") and not r.get("err")):
-                green.add(q)
-                last_green[q] = max(last_green.get(q, 0), rnd)
-    if green:
-        # every window slot refreshes an ever-green query (no slot
-        # wasted on a query that still needs pytest-only coverage)...
-        assert [q for q in _R14_WINDOW if q not in green] == []
-        # the 8 fronted queries are exactly the r13-rewritten rows the
-        # r13 window missed: last driver-green r12
-        assert all(last_green[q] == 12 for q in _R14_REWRITTEN)
-        # ...and the rotation slots pick the STALEST cohorts: every
-        # rotated row's newest green is r10/r11, and nothing outside
-        # the window is staler
-        assert all(last_green[q] <= 11 for q in _R14_WINDOW[8:])
-        behind = [q for q in names[50:] if q in last_green]
-        assert all(last_green[q] >= 11 for q in behind)
-        assert set(_R10_GREEN[16:]) <= green
-        assert set(_R11_GREEN[:8]) <= green
+    code = ("import json; from library_data_warehouse_and_business_"
+            "analytics_system_spark.plans import QUERIES; "
+            "print(json.dumps(list(QUERIES)))")
+
+    def names(hash_seed: str) -> list[str]:
+        env = dict(os.environ, PYTHONHASHSEED=hash_seed,
+                   PYTHONPATH=str(repo))
+        out = subprocess.run([sys.executable, "-c", code], env=env,
+                             cwd=repo, capture_output=True, text=True,
+                             check=True).stdout
+        return json.loads(out.strip().splitlines()[-1])
+
+    first, second = names("1"), names("2")
+    assert first == second
+    assert len(set(first)) == len(first)
+    assert first == list(QUERIES)
 
 
 def test_broadcast_joins_for_dimensions(plans):

@@ -78,6 +78,18 @@ def test_fit_is_deterministic(emb):
     assert b1 == b2
 
 
+def test_fit_empty_cell_keeps_its_centroid(spark):
+    """Vectors 0 and 1 seed both cells with the same subvectors; every
+    point ties and joins cell 0, so cell 1 is empty after the first
+    iteration and must keep its seed instead of vanishing."""
+    emb = spark.createDataFrame(
+        [(0, [0.0] * 4), (1, [0.0] * 4), (2, [4.0] * 4)],
+        "vec_id int, embedding array<double>")
+    books = pq_fit(emb, "embedding", dim=4, m=2, ksub=2, iters=1)
+    assert [book[1] for book in books] == [[0.0, 0.0], [0.0, 0.0]]
+    assert [book[0] for book in books] == [[4.0 / 3, 4.0 / 3]] * 2
+
+
 def test_fit_rejects_indivisible_dim(emb):
     with pytest.raises(ValueError):
         pq_fit(emb, "embedding", dim=64, m=5)

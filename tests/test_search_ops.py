@@ -12,6 +12,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from library_data_warehouse_and_business_analytics_system_spark.functions.vectors import (
+    dot,
+    sq_dist,
+)
 from library_data_warehouse_and_business_analytics_system_spark.operators import (
     cdc,
     clustering,
@@ -101,6 +105,56 @@ def test_assign_ties_break_to_lowest_cluster(spark):
         "cluster_id int, centroid array<float>")
     row = clustering.assign_clusters(emb, cent).collect()[0]
     assert row["cluster_id"] == 2 and row["dist"] == 1.0
+
+
+def test_kmeans_fit_rejects_fewer_vectors_than_k(spark):
+    emb = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 1.0])],
+        "vec_id int, embedding array<float>")
+    with pytest.raises(ValueError):
+        clustering.kmeans_fit(emb, k=3, iters=1)
+
+
+@pytest.mark.parametrize("score", ["sq_dist", "neg_dot"])
+def test_lloyd_ties_go_to_lowest_cell(spark, score):
+    """A point that scores equally against cells 1 and 2 joins cell 1
+    under both scores the fits use; cells 0 and 2, left empty, keep
+    their centroids."""
+    if score == "sq_dist":
+        fn, v, cents = sq_dist, [0.0, 0.0], [[5.0, 5.0], [1.0, 0.0],
+                                              [-1.0, 0.0]]
+    else:
+        fn, v, cents = (lambda a, b: -dot(a, b)), [1.0, 0.0], \
+            [[-1.0, 0.0], [0.0, 1.0], [0.0, -1.0]]
+    points = spark.createDataFrame([(0, v)], "j int, v array<double>")
+    assert clustering.lloyd(points, [cents], 1, fn) == \
+        [[cents[0], v, cents[2]]]
+
+
+def test_lloyd_iteration_costs_the_same_jobs_in_every_fit(spark, sf_dir):
+    """The three k-means fits share one Lloyd loop: one more iteration
+    costs each of them the same Spark jobs, at most two (the collect
+    and the centroid broadcast)."""
+    from library_data_warehouse_and_business_analytics_system_spark.operators import (
+        quantize,
+        similarity,
+    )
+
+    from .helpers import count_jobs
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    fits = {
+        "clustering": lambda it: clustering.kmeans_fit(emb, k=4, iters=it),
+        "ivf": lambda it: similarity.kmeans_fit(emb, "embedding", dim=64,
+                                                k=4, max_iter=it),
+        "pq": lambda it: quantize.pq_fit(emb, "embedding", dim=64, m=2,
+                                         ksub=8, iters=it),
+    }
+    deltas = {name: count_jobs(spark, lambda: fit(3))[1]
+              - count_jobs(spark, lambda: fit(2))[1]
+              for name, fit in fits.items()}
+    assert len(set(deltas.values())) == 1, deltas
+    assert 0 < deltas["clustering"] <= 2, deltas
 
 
 # ---------------------------------------------------------------------------
