@@ -1,23 +1,26 @@
-"""Benchmark harness: runs EVERY registry query at
+"""Benchmark harness: times every registry query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS], plus the library ETL/report section and the
+corpus-curation pipeline section, and prints ONE JSON line.
 
-Robustness contract (round-4 hardening):
-- A failing query NEVER kills the run: each call (warm-up and timed)
-  is guarded; failures land in an ``errors`` map and everything else
-  still gets timed and reported.  (Round 3's bench produced no JSON
-  at all because one query raised during warm-up.)
-- The stdout JSON line is kept SMALL — headline timings only — so a
-  tail-limited capture can't clip it (round 2's full 61-entry dict
-  overflowed the capture window).  The complete per-query dict is
-  written to ``BENCH_FULL.json`` next to this file.
+Sampling rule (:func:`sample`): headline items — the ``bench=True``
+queries and the library and pipeline sections — always get ``RUNS``
+timed calls, whatever the budget. Every other query is timed in up to
+``RUNS`` passes over the registry while $SPARK_GRAFT_BENCH_BUDGET_SEC
+(default 840 s, counted from start-up) lasts. An item's estimate is
+the lower median of its samples (contention only ever adds time), and
+a query the budget cut before its first sample is listed in
+``skipped``. A budget of 0 times the headline items only.
 
-Artifact convention (pinned round 13, VERDICT r12 item 5):
-``BENCH_FULL.json`` is a SCRATCH output — every sf0.1 run (ours or
-the driver's) overwrites it, so it is gitignored, not tracked. The
-canonical committed artifacts are the per-round stamped trio
-``BENCH_FULL_r{N}{A,B,C}.json`` (idle-host runs, copied by hand at
-round close) and the driver's own ``BENCH_r{N}.json``.
+A failing call never kills the run: its traceback tail lands in the
+``errors`` map, and the samples of earlier calls still count.
+
+The stdout line holds the headline timings only, so a tail-limited
+capture cannot clip it. The complete per-query dict goes to
+``BENCH_FULL.json`` next to this file (``BENCH_FULL_sf{N}.json`` for a
+run at another scale). Both are scratch outputs that every run
+overwrites, so they are gitignored; a change that quotes bench numbers
+records them in CHANGES.md.
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ import os
 import sys
 import time
 import traceback
+from collections.abc import Callable
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -34,20 +38,58 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from library_data_warehouse_and_business_analytics_system_spark.plans import QUERIES
 from library_data_warehouse_and_business_analytics_system_spark.session import get_spark
 
+#: Timed calls per headline item, and passes over the other queries.
+RUNS = 3
+
+#: (name, call, headline): ``call()`` runs the item's work to completion.
+Item = tuple[str, Callable[[], object], bool]
+
+
+def lower_median(samples: list[float]) -> float:
+    return sorted(samples)[(len(samples) - 1) // 2]
+
+
+def sample(items: list[Item], budget: float,
+           clock: Callable[[], float] = time.perf_counter,
+           ) -> tuple[dict[str, list[float]], dict[str, str], list[str]]:
+    """Time ``items`` under the sampling rule (module docstring) and
+    return (samples per name, error per name, skipped names). A call
+    that raises ends that item's sampling; its earlier samples stay."""
+    t0 = clock()
+    samples: dict[str, list[float]] = {}
+    errors: dict[str, str] = {}
+
+    def timed(name: str, call: Callable[[], object]) -> bool:
+        start = clock()
+        try:
+            call()
+        except Exception:
+            errors.setdefault(name, traceback.format_exc(limit=2)[-400:])
+            return False
+        samples.setdefault(name, []).append(clock() - start)
+        return True
+
+    for name, call, headline in items:
+        if headline:
+            for _ in range(RUNS):
+                if not timed(name, call):
+                    break
+    for _ in range(RUNS):
+        for name, call, headline in items:
+            if not headline and name not in errors and clock() - t0 < budget:
+                timed(name, call)
+    skipped = [name for name, _, _ in items
+               if name not in samples and name not in errors]
+    return samples, errors, skipped
+
 
 def _host_speed() -> dict:
-    """~1 s code-independent host-speed stamp (VERDICT r10 item 4):
-    cross-round adjudication of uniform bench slowdowns was a manual
-    ROUND*.md footnote; recording it in every artifact makes it
-    mechanical. Two axes: numpy matmul ≈ BLAS/SIMD throughput, a
-    pure-Python loop ≈ interpreter speed + CPU steal. The matmul size
-    is IN the key (ADVICE r11: single-thread GFLOPs are
-    size-dependent — cache/BLAS kernel regime — so only same-size
-    numbers compare; the r10 footnote's "14.5 GFLOPs" was measured at
-    2048³ and is NOT an anchor for this probe). Anchor at THIS size:
-    the r11 idle trio recorded 15.6–17.2 GFLOPs (key
-    ``numpy_matmul_gflops``, same 1024³ computation — renamed, not
-    re-measured) and pyloop 0.24 s; expect proportional values."""
+    """~1 s code-independent host-speed stamp, so a reader can tell a
+    uniformly slower host from a slower program. Two axes: numpy
+    matmul ≈ BLAS/SIMD throughput, a pure-Python loop ≈ interpreter
+    speed + CPU steal. The matmul size is IN the key: single-thread
+    GFLOPs depend on it (cache/BLAS kernel regime), so only same-size
+    numbers compare."""
     out: dict[str, float] = {}
     try:
         import numpy as np
@@ -69,509 +111,146 @@ def _host_speed() -> dict:
     return out
 
 
-# Budget-pressure shedding anchors (VERDICT r10 item 3): the r10
-# driver host ran ~1.4x slower than the committed trio's and the 840 s
-# budget dropped 98 of 181 pass-1 breadth timings — coverage must shed
-# LAST. The projections below scale the r10A idle-run section costs
-# (BENCH_FULL_r10A.json: avg headliner 1.15 s, pipeline section ~40 s,
-# pinned 3x block ~110 s, breadth single pass ~1.7x the headliner
-# average per query) by the measured headliner average, and each
-# fixed-cost section is shed when the projection says pass-1 breadth
-# would not fit without it. Every shed is recorded in the JSON.
-_REF_AVG_HEADLINER_SEC = 1.15
-_REF_PIPELINE_SEC = 40.0
-_REF_PINNED_SEC = 110.0
-_TAIL_PER_QUERY_VS_HEADLINER = 1.7
+def _load1() -> float | None:
+    try:
+        return os.getloadavg()[0]
+    except OSError:  # pragma: no cover - non-POSIX
+        return None
 
 
-def _trio_reference(repo: Path, sf: str) -> tuple[dict[str, float],
-                                                  float | None]:
-    """Per-query reference seconds for the stall detector (VERDICT
-    r11 item 4): the median across the NEWEST committed round trio
-    (``BENCH_FULL_r{N}{A,B,C}.json``) at the same sf, plus that
-    trio's median matmul stamp so the threshold can be normalized to
-    the current host. Returns ({}, None) when no matching trio exists
-    (e.g. smoke runs at another sf) — the detector then stays off."""
-    import re
-    trios: dict[int, list[Path]] = {}
-    for p in repo.glob("BENCH_FULL_r*.json"):
-        m = re.fullmatch(r"BENCH_FULL_r(\d+)[A-Z]", p.stem)
-        if m:
-            trios.setdefault(int(m.group(1)), []).append(p)
-    for rnd in sorted(trios, reverse=True):
-        refs: dict[str, list[float]] = {}
-        speeds: list[float] = []
-        for p in trios[rnd]:
-            try:
-                d = json.loads(p.read_text())
-            except (OSError, ValueError):
-                continue
-            if float(d.get("sf", -1.0)) != float(sf):
-                continue
-            h = d.get("host", {})
-            g = h.get("numpy_matmul_gflops_1024",
-                      h.get("numpy_matmul_gflops"))  # r11 key, same size
-            if g:
-                speeds.append(float(g))
-            for n, t in d.get("queries", {}).items():
-                if isinstance(t, (int, float)):
-                    refs.setdefault(n, []).append(float(t))
-        if refs:
-            # LOWER median (ADVICE r12): an even-length sample list
-            # (a trio member at another sf / unreadable) must not
-            # inflate the reference and relax the stall bar — same
-            # "contention only ever adds" convention as the tail's
-            # lower-median estimate.
-            med = {n: sorted(v)[(len(v) - 1) // 2]
-                   for n, v in refs.items()}
-            spd = (sorted(speeds)[(len(speeds) - 1) // 2]
-                   if speeds else None)
-            return med, spd
-    return {}, None
+def _library_items(spark) -> list[Item]:
+    """Library-domain section: fixture synthesis, the initial-load ETL
+    and the LQY reports, at the reference's designed volumes
+    (scale=1.0: 7.5k members / 200k borrows — BASELINE.md).
+    ``library_generate`` is driver-side Python, ``library_etl`` the
+    initial-load plan build + materialization; the reports run on the
+    warehouse of the latest ETL call."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from library_data_warehouse_and_business_analytics_system_spark.generators.library_data import (  # noqa: E501
+        AS_OF, generate,
+    )
+    from library_data_warehouse_and_business_analytics_system_spark.plans.library import (  # noqa: E501
+        initial_load, query1, query2, query3,
+    )
+    state: dict = {}
+
+    def gen() -> None:
+        state["raw"] = generate(seed=42, scale=1.0)
+
+    def etl() -> None:
+        for df in state.pop("dw", {}).values():
+            df.unpersist()
+        dw = initial_load(spark, state["raw"].to_spark(spark), as_of=AS_OF)
+        dw = {k: v.cache() for k, v in dw.items()}
+        # The seven loads are independent jobs whose tail stages run on
+        # few partitions, so they are submitted from a small pool. Dims
+        # are listed first and win their cache blocks' locks, so
+        # fact-side dim subtrees still reuse them.
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            list(pool.map(lambda df: df.count(), dw.values()))
+        state["dw"] = dw
+
+    def report(q) -> Callable[[], object]:
+        return lambda: q(state["dw"], 2019, 2024).collect()
+
+    return [("library_generate", gen, True), ("library_etl", etl, True),
+            ("lqy_query1", report(query1), True),
+            ("lqy_query2", report(query2), True),
+            ("lqy_query3", report(query3), True)]
+
+
+def _pipeline_items(spark, sf_dir: str, counts: dict) -> list[Item]:
+    """Flagship composition: the corpus-curation pipeline (scrub →
+    dedup → split → decontaminate → filter → chunk) as one
+    materialization, its durable twin with every stage boundary a
+    txlog table write (the delta between the two is the price of
+    durability), sequence packing and int8 quantization."""
+    import shutil
+    import tempfile
+
+    from library_data_warehouse_and_business_analytics_system_spark.operators.packing import (  # noqa: E501
+        pack_sequences,
+    )
+    from library_data_warehouse_and_business_analytics_system_spark.operators.quantize import (  # noqa: E501
+        quantize_int8,
+    )
+    from library_data_warehouse_and_business_analytics_system_spark.pipelines import (  # noqa: E501
+        curate_corpus, curate_corpus_durable,
+    )
+    from library_data_warehouse_and_business_analytics_system_spark.sources.catalog import (  # noqa: E501
+        load_table,
+    )
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
+
+    def curation() -> None:
+        n_chunks = curate_corpus(docs)["train_chunks"].count()
+        counts["corpus_curation_chunks"] = float(n_chunks)
+
+    def durable() -> None:
+        root = tempfile.mkdtemp(prefix="bench_curation_")
+        try:
+            curate_corpus_durable(spark, docs, root)
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+
+    return [
+        ("corpus_curation", curation, True),
+        ("corpus_curation_durable", durable, True),
+        ("sequence_packing", lambda: pack_sequences(docs, seq_len=256)
+         .selectExpr("max(end_tok)").collect(), True),
+        ("int8_quantize", lambda: quantize_int8(emb, "embedding")
+         .selectExpr("sum(size(qvec))", "sum(scale)").collect(), True),
+    ]
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # Wall-clock budget: the JSON line must be printed even under an
-    # external timeout, so once the budget is spent the remaining
-    # NON-headline work is skipped (headliners always run — they are
-    # the cross-round comparable).
-    # 480 → 560 → 840 across round 7: the registry grew 90 → 165
-    # (search / clustering / graph / CDC / tx-read gates, then the
-    # batch-4/5/6 relational shapes and the analytics families) and
-    # 560 s dropped a 14-query breadth tail at sf0.1 on an idle host.
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "840"))
-    # Headline-only mode (VERDICT r11 item 5): scale checkpoints at
-    # sf1 time the cross-round-comparable sections (headliners +
-    # library + pipeline) without paying a 10x breadth tail; the
-    # skipped tail is recorded in `shed`, never silent.
-    headline_only = os.environ.get(
-        "SPARK_GRAFT_BENCH_HEADLINE_ONLY") == "1"
     t_begin = time.perf_counter()
-    try:  # load BEFORE our own JVM spins up = the external contention
-        load1_start = os.getloadavg()[0]
-    except OSError:  # pragma: no cover - non-POSIX
-        load1_start = None
+    load1_start = _load1()  # before our own JVM: the external contention
     speed = _host_speed()   # before the JVM: unpolluted by executors
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    specs = list(QUERIES.values())
-    # Headliners first so a budget cut only ever drops breadth entries.
-    specs.sort(key=lambda s: not s.bench)
-
-    errors: dict[str, str] = {}
-
-    # Warm the JVM + parquet footers via the headline subset (the same
-    # warm-up round 1 used, keeping the headline total comparable);
-    # the rest of the registry is then timed single-run on the warm
-    # session — a full double-run of all queries would double bench
-    # wall time for no extra signal.
-    for spec in specs:
-        if spec.bench:
-            try:
-                spec.fn(spark, sf_dir).limit(1).collect()
-            except Exception:
-                errors[spec.name] = traceback.format_exc(limit=2)[-400:]
-
-    # Variance protocol (round-5): single samples produced an
-    # unexplained 11x cross-round swing on embedding_near_dups
-    # (43.2s driver vs 3.8s committed, same code — VERDICT r4).
-    # Headliners and the historically-noisy queries are timed 3x and
-    # the MEDIAN is reported, with (min, med, max) preserved in
-    # BENCH_FULL.json["stats"].  Round 6 trimmed the pin set back to
-    # the queries whose r5 triples actually showed spread — pinning
-    # the whole stable pair family tripled ~50s of work and pushed
-    # the library section past the wall-clock budget on a slow host.
-    # Round-7 additions (VERDICT r6 item 5): the iterative-convergence
-    # family (dedup_clusters swung 7.9s committed vs 22.4s in the
-    # judge's re-run) and its pair-generation sibling.
-    # Session-4 addition: copurchase_pagerank is the same
-    # iterative-localCheckpoint shape and swung 9.2s committed vs
-    # 20.9s isolated on a drifted host — median-of-3 it too.
-    PIN_MEDIAN = {
-        "embedding_near_dups", "embedding_near_dups_strict",
-        "dedup_incremental", "dedup_clusters", "dedup_kept_corpus",
-        "copurchase_pagerank",
-    }
-
-    # Write-path gates execute a full staged-write + read-back each
-    # call; a limit(1) "warm" pass would run the whole write AGAIN
-    # for no scan-warming benefit — time them cold, once.
-    NO_WARM = {
-        "merge_parts_orders", "merge_upsert_orders",
-        "borrowing_not_exists_append", "scd2_dimbook_apply",
-        "txlog_time_travel", "incremental_agg_orders",
-        "optimize_zorder_orders", "restore_orders_version",
-        "clone_orders_isolated", "warehouse_consistent_read",
-        "mor_delete_orders", "stats_skipping_orders",
-        "bucketed_join_revenue", "bloom_point_lookup",
-        "incremental_minmax_orders", "parts_skipping_orders",
-        "orders_schema_evolution", "orders_maintenance_cycle",
-    }
-
-    timings: dict[str, float] = {}
-    stats: dict[str, list[float]] = {}
-    skipped: list[str] = []
-
-    # Bounded stall re-sample (VERDICT r11 item 4): host stalls
-    # polluted the events_daily_ewma/_vec trio medians three rounds
-    # running (35.7 s worst sample vs 3.3 s best on untouched code)
-    # and needed manual adjudication each time. A sample that exceeds
-    # 3x the newest committed trio's median for that query (host-
-    # normalized via the matmul stamps, and only above a 2 s floor —
-    # sub-second jitter is not a stall) is re-timed ONCE within the
-    # same run; both samples land in the artifact's ``resampled`` map
-    # and the better one feeds the estimate (contention is one-sided:
-    # it only ever adds). At most one re-time per query, never for
-    # the non-idempotent NO_WARM write gates, never past the budget.
-    ref_meds, ref_gflops = _trio_reference(
-        Path(__file__).resolve().parent, sf)
-    cur_gflops = speed.get("numpy_matmul_gflops_1024")
-    # Clamped to >= 1.0: a slow host RELAXES the threshold, but a
-    # fast matmul stamp must never TIGHTEN it below the 3x base —
-    # the stamp is a point sample taken before the JVM exists, and a
-    # shared VM can stamp fast then run contended (r12 trio run B:
-    # 23.3 GFLOPs stamp tightened the bar to ~2.1x and 40 of 183
-    # queries re-timed, burning the run's budget on 2-3x jitter that
-    # is NOT the stall pathology this exists for).
-    host_adj = 1.0
-    if ref_gflops and cur_gflops:
-        host_adj = min(max(ref_gflops / cur_gflops, 1.0), 3.0)
-    resampled: dict[str, list[float]] = {}
-    # Bounded in COUNT too: each re-time costs a full extra run, so a
-    # systemically-turbulent host must not turn the detector into a
-    # 2x-everything pass — past the cap, samples stand as measured
-    # (the stats triples still expose them).
-    MAX_RESAMPLES = 12
-
-    def maybe_resample(spec, dt: float, cold: bool = False) -> float:
-        ref = ref_meds.get(spec.name)
-        if (cold or ref is None or spec.name in NO_WARM
-                or spec.name in resampled or spec.name in errors
-                or len(resampled) >= MAX_RESAMPLES
-                or dt <= max(3.0 * ref * host_adj, 2.0)
-                or budget - (time.perf_counter() - t_begin) < dt + 5.0):
-            return dt
-        start = time.perf_counter()
-        try:
-            spec.fn(spark, sf_dir).collect()
-        except Exception:
-            errors.setdefault(spec.name,
-                              traceback.format_exc(limit=2)[-400:])
-            return dt
-        dt2 = time.perf_counter() - start
-        resampled[spec.name] = [round(dt, 4), round(dt2, 4)]
-        return min(dt, dt2)
-
-    def time_spec(spec) -> None:
-        n_runs = 3 if (spec.bench or spec.name in PIN_MEDIAN) else 1
-        samples: list[float] = []
-        for run_i in range(n_runs):
-            start = time.perf_counter()
-            try:
-                spec.fn(spark, sf_dir).collect()
-            except Exception:
-                errors.setdefault(spec.name,
-                                  traceback.format_exc(limit=2)[-400:])
-                break
-            # The FIRST of a multi-run triple carries legitimate
-            # cold-start cost (first-touch parquet footers / JIT on
-            # the full plan — the headline warm pass only ran
-            # limit(1), and PIN_MEDIAN specs warm themselves) which
-            # is not the stall pathology: re-timing it would
-            # warm-bias the stats triple vs pre-r12 artifacts
-            # (ADVICE r12). Runs 2-3 compare warm-vs-warm.
-            samples.append(maybe_resample(
-                spec, time.perf_counter() - start,
-                cold=(run_i == 0 and n_runs > 1)))
-        # A failure on a LATER run must not discard earlier valid
-        # samples (ADVICE r5): report the median of what succeeded
-        # (the error is still recorded above).
-        if not samples:
-            return
-        samples.sort()
-        timings[spec.name] = round(samples[len(samples) // 2], 4)
-        if n_runs > 1:
-            stats[spec.name] = [round(samples[0], 4),
-                                round(samples[len(samples) // 2], 4),
-                                round(samples[-1], 4)]
-
-    # Headliners first — they are the cross-round comparable.  The
-    # breadth tail runs LAST (after the library + pipeline sections),
-    # so a budget cut only ever drops breadth entries; round 6's
-    # driver host ran ~2x slower than round 5's and the old ordering
-    # silently dropped the library section instead.
-    for spec in specs:
-        if spec.bench:
-            time_spec(spec)
-
-    headline = round(sum(t for n, t in timings.items() if QUERIES[n].bench), 4)
-
-    def remaining() -> float:
-        return budget - (time.perf_counter() - t_begin)
-
-    # Budget projections (VERDICT r10 item 3): scale the r10A idle-run
-    # section anchors by this run's measured headliner average, then
-    # shed fixed-cost extras (ETL re-timing, the durable pipeline
-    # twin, the tail's warm pass) whenever the projection says pass-1
-    # breadth coverage would not fit with them. Sheds are recorded in
-    # the artifact — never silent.
-    shed: dict[str, str] = {}
-    n_bench = sum(1 for s in specs if s.bench)
-    avg_q = (headline / n_bench) if n_bench and headline > 0 else 1.0
-    host_factor = max(avg_q / _REF_AVG_HEADLINER_SEC, 0.25)
-    n_tail = sum(1 for s in specs
-                 if not s.bench and s.name not in PIN_MEDIAN)
-    est_tail1 = _TAIL_PER_QUERY_VS_HEADLINER * avg_q * n_tail
-    est_pinned = _REF_PINNED_SEC * host_factor
-    est_pipeline = _REF_PIPELINE_SEC * host_factor
-
-    # Library-domain reports (LQY1-3) at the reference's designed
-    # volumes (scale=1.0: 7.5k members / 200k borrows — BASELINE.md).
-    # Timer is SPLIT: `library_generate` is driver-side Python fixture
-    # synthesis (not Spark), `library_etl` is the actual initial-load
-    # plan build + materialization — the cross-round comparable for
-    # EP2 (05_InitialLoading.sql end-to-end).  Guarded: a failure here
-    # must not cost the registry bench line.
-    extra: dict[str, float] = {}
-    # Non-timing observables (row counts etc.) live in their OWN map —
-    # mixing them into the seconds map corrupted consumers that sum or
-    # rank `queries` (VERDICT r5 nit 1).
     counts: dict[str, float] = {}
-    try:
-        if time.perf_counter() - t_begin > budget * 0.75:
-            raise TimeoutError("bench budget spent before library section")
-        from library_data_warehouse_and_business_analytics_system_spark.generators.library_data import (  # noqa: E501
-            AS_OF, generate,
-        )
-        from library_data_warehouse_and_business_analytics_system_spark.plans.library import (  # noqa: E501
-            initial_load, query1, query2, query3,
-        )
-        start = time.perf_counter()
-        raw = generate(seed=42, scale=1.0)
-        extra["library_generate"] = round(time.perf_counter() - start, 4)
-        # ETL timed 3x like the pinned queries (it swung 8.8<->14.1s
-        # across round-5 runs as a single sample — the slowest item in
-        # the bench must not also be the noisiest); the LAST build's
-        # cached warehouse feeds the report timings below. Under
-        # budget pressure the 2 extra samples shed FIRST (VERDICT r10
-        # item 3: they cost ~30 s the r10 driver run spent while 98
-        # breadth queries went untimed).
-        est_rest = est_pipeline + est_pinned + est_tail1 + 60.0
-        n_etl = 3 if remaining() - est_rest > 30.0 * host_factor else 1
-        if n_etl == 1:
-            shed["library_etl_retime"] = "1 sample (budget pressure)"
-        etl_samples = []
-        for i in range(n_etl):
-            start = time.perf_counter()
-            oltp = raw.to_spark(spark)
-            dw = initial_load(spark, oltp, as_of=AS_OF)
-            dw = {k: v.cache() for k, v in dw.items()}
-            # Materialize the warehouse: same computation as the
-            # sequential per-table count loop rounds 1-13 timed (all 7
-            # tables cached + counted inside the timer), submitted
-            # from a small thread pool (r14, guide §2.6 "overlap
-            # independent jobs"): each load's tail stages run on 1-5
-            # partitions while the other 27+ cores sat idle, and the
-            # three fact loads are independent jobs. Dims are listed
-            # first and win their cache blocks' per-block locks, so
-            # fact-side dim subtrees still reuse them.
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=4) as pool:
-                list(pool.map(lambda df: df.count(), dw.values()))
-            etl_samples.append(time.perf_counter() - start)
-            if i < n_etl - 1:   # rebuild from scratch next iteration
-                for df in dw.values():
-                    df.unpersist()
-        etl_samples.sort()
-        extra["library_etl"] = round(etl_samples[len(etl_samples) // 2], 4)
-        if n_etl > 1:
-            stats["library_etl"] = [round(etl_samples[0], 4),
-                                    round(etl_samples[len(etl_samples) // 2],
-                                          4),
-                                    round(etl_samples[-1], 4)]
-        # Back-compat total (rounds 1-2 reported the combined number).
+    # The library section's report names are registry names too, so the
+    # sections are sampled (and reported) apart from the registry.
+    section_samples, section_errors, _ = sample(
+        _library_items(spark) + _pipeline_items(spark, sf_dir, counts), 0.0)
+    specs = sorted(QUERIES.values(), key=lambda s: not s.bench)
+    samples, errors, skipped = sample(
+        [(s.name, lambda s=s: s.fn(spark, sf_dir).collect(), s.bench)
+         for s in specs],
+        budget - (time.perf_counter() - t_begin))
+    errors.update({f"section {n}": e for n, e in section_errors.items()})
+
+    def spread(by_name: dict[str, list[float]]) -> dict[str, list[float]]:
+        return {n: [round(min(v), 4), round(lower_median(v), 4),
+                    round(max(v), 4)] for n, v in by_name.items()
+                if len(v) > 1}
+
+    stats = {**spread(samples), **spread(section_samples)}
+    timings = {n: round(lower_median(v), 4) for n, v in samples.items()}
+    extra = {n: round(lower_median(v), 4)
+             for n, v in section_samples.items()}
+    if "library_generate" in extra and "library_etl" in extra:
         extra["library_initial_load"] = round(
             extra["library_generate"] + extra["library_etl"], 4)
-        for name, q in [("lqy_query1", query1), ("lqy_query2", query2),
-                        ("lqy_query3", query3)]:
-            start = time.perf_counter()
-            q(dw, 2019, 2024).collect()
-            extra[name] = round(time.perf_counter() - start, 4)
-    except Exception as exc:  # pragma: no cover - defensive
-        errors["library_section"] = str(exc)[:200]
+    headline = round(sum(t for n, t in timings.items() if QUERIES[n].bench),
+                     4)
+    # Breadth passes the budget cut before every query had its sample.
+    breadth = [s.name for s in specs
+               if not s.bench and s.name not in errors]
+    shed = [f"breadth_pass_{p}" for p in range(1, RUNS + 1)
+            if any(len(samples.get(n, ())) < p for n in breadth)]
 
-    # Flagship composition: the end-to-end corpus-curation pipeline
-    # (scrub → dedup → split → decontaminate → filter → chunk) timed
-    # as one materialization — the number a user comparing engines
-    # actually feels. Guarded like the library section.
-    try:
-        if time.perf_counter() - t_begin > budget * 0.9:
-            raise TimeoutError("bench budget spent before pipeline section")
-        from library_data_warehouse_and_business_analytics_system_spark.pipelines import (  # noqa: E501
-            curate_corpus,
-        )
-        from library_data_warehouse_and_business_analytics_system_spark.sources.catalog import (  # noqa: E501
-            load_table,
-        )
-        docs = load_table(spark, sf_dir, "documents")
-        start = time.perf_counter()
-        stages = curate_corpus(docs)
-        n_chunks = stages["train_chunks"].count()
-        extra["corpus_curation"] = round(time.perf_counter() - start, 4)
-        counts["corpus_curation_chunks"] = float(n_chunks)
-
-        # Durable twin: same pipeline with every stage boundary a
-        # txlog table write (the restartable 100 TB shape) — the
-        # delta vs `corpus_curation` is the price of durability.
-        # Sheds under budget pressure BEFORE pass-1 breadth coverage
-        # does (VERDICT r10 item 3) — the in-memory twin above stays
-        # the cross-round comparable.
-        if remaining() - (est_pinned + est_tail1 + 40.0) \
-                < 15.0 * host_factor:
-            shed["corpus_curation_durable"] = "skipped (budget pressure)"
-        else:
-            import shutil
-            import tempfile
-
-            from library_data_warehouse_and_business_analytics_system_spark.pipelines import (  # noqa: E501
-                curate_corpus_durable,
-            )
-            root = tempfile.mkdtemp(prefix="bench_curation_")
-            try:
-                start = time.perf_counter()
-                curate_corpus_durable(spark, docs, root)
-                extra["corpus_curation_durable"] = round(
-                    time.perf_counter() - start, 4)
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
-
-        from library_data_warehouse_and_business_analytics_system_spark.operators.packing import (  # noqa: E501
-            pack_sequences,
-        )
-        start = time.perf_counter()
-        pack_sequences(docs, seq_len=256).selectExpr(
-            "max(end_tok)").collect()
-        extra["sequence_packing"] = round(time.perf_counter() - start, 4)
-
-        from library_data_warehouse_and_business_analytics_system_spark.operators.quantize import (  # noqa: E501
-            quantize_int8,
-        )
-        emb = load_table(spark, sf_dir, "embeddings")
-        start = time.perf_counter()
-        quantize_int8(emb, "embedding").selectExpr(
-            "sum(size(qvec))", "sum(scale)").collect()
-        extra["int8_quantize"] = round(time.perf_counter() - start, 4)
-    except Exception as exc:  # pragma: no cover - defensive
-        errors["pipeline_section"] = str(exc)[:200]
-
-    # Breadth tail: everything not already timed. Warm first-touch
-    # with one limit(1) pass (VERDICT r6 item 5: single-run tail
-    # numbers carried first-touch JIT/footer noise across rounds),
-    # then time single-run, budget-gated per query (skips are
-    # recorded, never silent). The warm pass nearly DOUBLES the tail's
-    # cost (a limit(1) still executes most plans), so on a slow host
-    # it sheds before pass-1 coverage does (VERDICT r10 item 3):
-    # noisier single-cold numbers beat 98 missing ones.
-    # (the pinned 3x block still runs between this warm pass and the
-    # timed passes, so budget for it too)
-    warm_tail = remaining() > est_pinned + 2.1 * est_tail1
-    if headline_only:
-        warm_tail = False
-        shed["breadth_tail"] = "skipped (headline-only mode)"
-        # Per-query absence must be machine-detectable (ADVICE r12):
-        # consumers keying on skipped/n_skipped saw 0 while
-        # n_queries silently dropped by ~130.
-        skipped.extend(s.name for s in specs if not s.bench)
-    elif not warm_tail:
-        shed["tail_warm_pass"] = "skipped (budget pressure)"
-    for spec in specs:
-        if not warm_tail:
-            break
-        if spec.bench or spec.name in PIN_MEDIAN or spec.name in NO_WARM:
-            continue  # pinned queries warm themselves (3 timed runs)
-        if time.perf_counter() - t_begin > budget * 0.95:
-            break
-        try:
-            spec.fn(spark, sf_dir).limit(1).collect()
-        except Exception:
-            errors.setdefault(spec.name,
-                              traceback.format_exc(limit=2)[-400:])
-    # Median-of-3 for the WHOLE breadth tail, budget-opportunistic
-    # (VERDICT r8 item 8: single-sample tail numbers like
-    # order_price_bands' 8.86-vs-0.89s swing polluted cross-round
-    # diffs). Pass 1 is the old behavior and always completes within
-    # budget (skips recorded as before); passes 2-3 run only while
-    # budget remains — under the driver's default 840 s at sf0.1
-    # that's usually partial, so round-close runs raise
-    # SPARK_GRAFT_BENCH_BUDGET_SEC (1800) to land all three passes
-    # and the committed canonical artifact carries true medians. The
-    # estimate is the LOWER median of collected samples (for 2
-    # samples: the min — timing noise is one-sided, contention only
-    # ever adds).
-    # Historically-noisy pinned queries first (their 3 runs are
-    # mandatory signal — they must not lose the budget race to the
-    # tail's opportunistic passes 2-3).
-    for spec in specs:
-        if headline_only:
-            break
-        if spec.bench or spec.name not in PIN_MEDIAN:
-            continue
-        if time.perf_counter() - t_begin > budget:
-            skipped.append(spec.name)
-            continue
-        time_spec(spec)
-    tail_samples: dict[str, list[float]] = {}
-    for pass_i in range(3 if not headline_only else 0):
-        out_of_budget = False
-        for spec in specs:
-            if spec.bench or spec.name in PIN_MEDIAN:
-                continue  # already timed median-of-3 by time_spec
-            if pass_i and spec.name in NO_WARM:
-                # Cold-once write-path gates keep their single pass-0
-                # sample: re-running a non-idempotent staged write
-                # times a warm no-op (and mutates table state again),
-                # so the lower-median would record the wrong thing.
-                continue
-            if time.perf_counter() - t_begin > budget:
-                out_of_budget = True
-                if pass_i == 0 and spec.name not in tail_samples:
-                    skipped.append(spec.name)
-                continue
-            start = time.perf_counter()
-            try:
-                spec.fn(spark, sf_dir).collect()
-            except Exception:
-                errors.setdefault(spec.name,
-                                  traceback.format_exc(limit=2)[-400:])
-                continue
-            tail_samples.setdefault(spec.name, []).append(
-                maybe_resample(spec, time.perf_counter() - start))
-        if out_of_budget:
-            break
-    for name, samples in tail_samples.items():
-        samples.sort()
-        timings[name] = round(samples[(len(samples) - 1) // 2], 4)
-        if len(samples) > 1:
-            stats[name] = [round(samples[0], 4),
-                           round(samples[(len(samples) - 1) // 2], 4),
-                           round(samples[-1], 4)]
-
-    # Host stamp (VERDICT r6 item 8): round-6's committed numbers were
-    # contention artifacts of a busy driver host; recording load lets
-    # the next reader tell host noise from a real regression without
-    # re-running.
-    try:
-        load1 = os.getloadavg()[0]
-    except OSError:  # pragma: no cover - non-POSIX
-        load1 = None
     host = {"cpus": os.cpu_count(), "load1_at_start": load1_start,
-            "load1_at_exit": load1,
+            "load1_at_exit": _load1(),
             "wall_sec": round(time.perf_counter() - t_begin, 1),
             **speed}
-
     all_timings = {**timings, **extra}
     full = {
         "metric": "headline_queries_total",
@@ -584,15 +263,13 @@ def main() -> None:
         "n_queries": len(timings),
         "skipped": skipped,
         "shed": shed,
-        "resampled": resampled,
         "errors": errors,
         "host": host,
         "sf": float(sf),
     }
     try:
-        # BENCH_FULL.json is the canonical cross-round sf0.1 artifact;
-        # a smoke run at another SF must not clobber it (it did in
-        # round 7 — the committed file silently became sf0.001).
+        # A smoke run at another scale must not overwrite the sf0.1
+        # artifact.
         name = ("BENCH_FULL.json" if "SPARK_GRAFT_SF_DIR" not in os.environ
                 or sf_dir.rstrip("/").endswith("sf0.1")
                 else f"BENCH_FULL_sf{sf}.json")
@@ -601,10 +278,8 @@ def main() -> None:
     except OSError:
         pass
 
-    # Slim stdout line: headline queries + library section only, so a
-    # tail-limited capture always sees the complete JSON object.
-    slim_queries = {n: t for n, t in all_timings.items()
-                    if n in extra or (n in QUERIES and QUERIES[n].bench)}
+    slim_queries = {**{n: t for n, t in timings.items() if QUERIES[n].bench},
+                    **extra}
     print(json.dumps({
         "metric": "headline_queries_total",
         "value": headline,
@@ -614,8 +289,7 @@ def main() -> None:
         "n_queries": len(timings),
         "n_skipped": len(skipped),
         "n_errors": len(errors),
-        "n_resampled": len(resampled),
-        "shed": sorted(shed),
+        "shed": shed,
         "host": host,
         "sf": float(sf),
     }), flush=True)

@@ -64,7 +64,6 @@ def margin_mine(a: DataFrame, b: DataFrame, id_col: str = "vec_id",
                 threshold: float = 1.0,
                 pairs: DataFrame | None = None,
                 snap_decimals: int | None = None,
-                pin_scored: bool = False,
                 broadcast_sums: bool | None = None) -> DataFrame:
     """Mine high-margin pairs from side ``a`` into side ``b``.
 
@@ -88,18 +87,6 @@ def margin_mine(a: DataFrame, b: DataFrame, id_col: str = "vec_id",
     produced by an ANN candidate stage (see module docstring). When
     None, the exact A×B cross product is scored with the ``b`` side
     broadcast — the gate/oracle posture.
-
-    ``pin_scored`` materializes the slim scored pair frame
-    ``(src_id, tgt_id, cos)`` with ``localCheckpoint`` before the
-    window/aggregate consumers. The plan references the scored set
-    three times (both neighborhood sums + the final margin join);
-    exchange reuse usually dedups the shared window lineage, but at
-    ANN-candidate scale a pinned 24-byte/pair frame is strictly
-    cheaper than trusting the planner (measured 3.1× end-to-end on a
-    15M-candidate mine: 506 s → 165 s, ROUND10.md) — the cost is
-    candidates × 24 bytes of storage. Keep it False for gate-sized
-    inputs (the default), where determinism-under-reuse is the
-    priority and the pin buys nothing.
 
     ``broadcast_sums`` controls the join strategy for the two
     neighborhood-sum frames (one row per distinct src/tgt id). Default
@@ -140,8 +127,6 @@ def margin_mine(a: DataFrame, b: DataFrame, id_col: str = "vec_id",
             F.col("_src_nsq"), F.col("_tgt_nsq"),
         ).alias("cos"),
     )
-    if pin_scored:
-        scored = scored.localCheckpoint()
 
     ws = Window.partitionBy("src_id").orderBy(F.desc("cos"), F.asc("tgt_id"))
     wt = Window.partitionBy("tgt_id").orderBy(F.desc("cos"), F.asc("src_id"))

@@ -113,28 +113,29 @@ def assign_clusters(emb: DataFrame, centroids: DataFrame,
                     centroid_vec: str = "centroid") -> DataFrame:
     """Assign each vector to its nearest centroid.
 
-    ``centroids`` is a k-row frame — broadcast-crossed into the
-    corpus (k × N scoring is the semantics; the small side is the
-    centroid table, same shape as ``cosine_topk``'s query side).
-    Returns (id, cluster_id, dist) with dist the squared L2
-    distance; ties go to the lowest cluster_id via struct ordering.
+    ``centroids`` is a k-row frame, folded into ONE broadcast row of
+    ``(cid, cvec)`` structs and crossed into the corpus (k × N scoring
+    is the semantics; the small side is the centroid table). The
+    argmin is map-side, as in :func:`lloyd`: ``array_min`` over
+    ``(dist, cid)`` structs, so ties go to the lowest cluster_id and no
+    shuffle of the corpus is needed. Returns (id, cluster_id, dist)
+    with dist the squared L2 distance and cluster_id of the centroid
+    frame's type, one row per input row (duplicate ids stay separate).
     """
-    scored = emb.crossJoin(F.broadcast(
-        centroids.select(F.col(centroid_id).alias("_cid"),
-                         F.col(centroid_vec).alias("_cvec"))))
-    dist = sq_dist(F.col(vec_col), F.col("_cvec"))
-    best = (
-        scored.select(F.col(id_col), F.struct(dist.alias("d"),
-                                              F.col("_cid").alias("cid"))
-                      .alias("cand"))
-        .groupBy(id_col)
-        .agg(F.min("cand").alias("best"))
-    )
-    return best.select(
-        F.col(id_col),
-        F.col("best.cid").alias("cluster_id"),
-        F.col("best.d").alias("dist"),
-    )
+    # coalesce(1) gives the fold's aggregate a single-partition child,
+    # so it plans without an exchange.
+    books = F.broadcast(centroids.coalesce(1).agg(F.collect_list(F.struct(
+        F.col(centroid_id).alias("cid"),
+        F.col(centroid_vec).alias("cvec"))).alias("_cents")))
+    best = F.array_min(F.transform(F.col("_cents"), lambda c: F.struct(
+        sq_dist(F.col(vec_col), c["cvec"]).alias("d"),
+        c["cid"].alias("cid"))))
+    # The argmin gets its own select so that reading its two fields
+    # does not evaluate it twice.
+    return (emb.crossJoin(books)
+            .select(F.col(id_col), best.alias("_best"))
+            .select(id_col, F.col("_best.cid").alias("cluster_id"),
+                    F.col("_best.d").alias("dist")))
 
 
 def semantic_dedup_pairs(emb: DataFrame, centroids: DataFrame,

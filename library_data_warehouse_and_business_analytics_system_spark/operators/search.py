@@ -15,8 +15,7 @@ stripped — because ``ln`` is NOT bit-identical between libm and the
 JVM (measured: ~4 % of inputs differ in the last ulp), while plain
 IEEE arithmetic with identical parenthesization is. Per-document
 scores fold contributions in sorted-term order on both engines, so
-even the raw double scores hash-match. The classic ``ln`` idf is
-available via ``log_idf=True`` for production ranking.
+even the raw double scores hash-match.
 
 Scale posture (the part that matters at 100 TB):
 - Postings are (term, doc) pairs keyed on the term string. For a
@@ -67,10 +66,9 @@ def doc_postings(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _idf(n_docs: Column, df: Column, log_idf: bool) -> Column:
-    """Odds-ratio idf (rational, bit-comparable) or classic ln idf."""
-    odds = (n_docs.cast("double") - df + F.lit(0.5)) / (df + F.lit(0.5))
-    return F.log(F.lit(1.0) + odds) if log_idf else odds
+def _idf(n_docs: Column, df: Column) -> Column:
+    """Odds-ratio idf: rational, so bit-comparable across engines."""
+    return (n_docs.cast("double") - df + F.lit(0.5)) / (df + F.lit(0.5))
 
 
 def _corpus_scalars(docs: DataFrame, text_col: str) -> DataFrame:
@@ -87,15 +85,15 @@ def _corpus_scalars(docs: DataFrame, text_col: str) -> DataFrame:
 
 
 def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
-              k1: float = 1.2, b: float = 0.75, log_idf: bool = False,
+              k1: float = 1.2, b: float = 0.75,
               id_col: str = "doc_id", text_col: str = "text",
               ) -> DataFrame:
     """BM25-style ranked retrieval for one query.
 
     Returns (doc_id, score, rank) for the top-``k`` documents with
     doc_id as the deterministic tie-break. Per-document scores fold
-    term contributions in sorted-term order, so with the default
-    rational idf the raw doubles are reproducible bit-for-bit.
+    term contributions in sorted-term order, so with the rational idf
+    the raw doubles are reproducible bit-for-bit.
     """
     terms = sorted(set(query_terms))
     post = doc_postings(docs, id_col, text_col)
@@ -111,7 +109,7 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
         .crossJoin(F.broadcast(scalars))
         .withColumn(
             "w",
-            _idf(F.col("n_docs"), F.col("df"), log_idf)
+            _idf(F.col("n_docs"), F.col("df"))
             * (F.col("tf") * F.lit(k1 + 1.0))
             / (F.col("tf")
                + F.lit(k1) * (F.lit(1.0 - b)
@@ -178,13 +176,12 @@ def rrf_fuse(ranked_a: DataFrame, ranked_b: DataFrame,
 
 
 def tfidf_top_terms(docs: DataFrame, per_doc: int = 3,
-                    log_idf: bool = False,
                     id_col: str = "doc_id", text_col: str = "text",
                     ) -> DataFrame:
     """Top-``per_doc`` terms per document by tf × idf.
 
     weight = (tf / dl) * idf(df), with the rational odds-ratio idf
-    by default (module docstring). The df side spans the whole
+    (module docstring). The df side spans the whole
     vocabulary, so it is computed as a window over a hash exchange on
     the term key (never a broadcast). The per-document top-N is a
     window partitioned by doc_id: partition cardinality is the
@@ -208,7 +205,7 @@ def tfidf_top_terms(docs: DataFrame, per_doc: int = 3,
         .withColumn(
             "weight",
             (F.col("tf").cast("double") / F.col("dl"))
-            * _idf(F.col("n_docs"), F.col("df"), log_idf),
+            * _idf(F.col("n_docs"), F.col("df")),
         )
     )
     w = (Window.partitionBy("doc_id")

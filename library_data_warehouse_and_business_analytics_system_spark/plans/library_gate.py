@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from ..sources.catalog import read_parquet
 from .library import (query1, query1_subtotals, query2, query2_subtotals,
                       query3, query3_subtotals)
-from .registry import register
+from .registry import gate_root, register
 
 FIXTURE_DIR = (pathlib.Path(__file__).resolve().parents[2]
                / "fixtures" / "library_dw")
@@ -599,10 +599,6 @@ def merge_parts_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge never reads or rewrites (pinned by tests/test_txlog_parts).
     A green row certifies staging, the replace_parts commit, and the
     partition-pruned snapshot read bit-for-bit."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..functions.text import md5_bucket
     from ..sources.catalog import load_table
     from ..sources.txlog import tx_merge_parts, tx_read_parts, tx_write_parts
@@ -610,8 +606,7 @@ def merge_parts_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year"),
         "o_custkey", "o_totalprice")
-    root = tempfile.mkdtemp(prefix="txparts_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txparts_gate_")
     t = f"{root}/orders"
     tx_write_parts(orders, t, "o_year", mode="overwrite")
 

@@ -15,6 +15,9 @@ Determinism contract for oracle-matched queries:
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -46,3 +49,13 @@ def register(name: str, oracle: str | None, *,
         return fn
 
     return deco
+
+
+def gate_root(prefix: str) -> str:
+    """A fresh scratch directory for a write gate's tables, removed at
+    interpreter exit: every call of a gate writes into its own root, and
+    repeated bench/pytest processes would otherwise leave their roots in
+    the system temp dir."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root

@@ -22,7 +22,7 @@ from ..operators import (
     validate,
 )
 from ..sources.catalog import load_table
-from .registry import register
+from .registry import gate_root, register
 
 # ---------------------------------------------------------------------------
 # BM25-style ranked retrieval. The reference has no text-search
@@ -642,17 +642,12 @@ def txlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: Oracle flashback query (AS OF SCN) over the
     loaded warehouse; format-level the Delta time-travel contract.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     from ..sources.txlog import tx_checkpoint, tx_read, tx_write
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year"),
         F.col("o_totalprice").cast("decimal(18,4)").alias("tp"))
-    root = tempfile.mkdtemp(prefix="txtt_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txtt_gate_")
     t = f"{root}/orders_tl"
     tx_write(orders.filter(F.col("o_year") <= 1996), t, mode="append")
     c2 = tx_write(orders.filter(F.col("o_year") == 1997), t, mode="append")
@@ -694,10 +689,6 @@ def optimize_zorder_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     the layout rewrite is row-identical (Delta's OPTIMIZE contract).
     Footer-stat clustering and time-travel preservation are pinned in
     tests/test_optimize_parts.py."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..sources.txlog import (
         tx_optimize_parts,
         tx_read_parts,
@@ -707,8 +698,7 @@ def optimize_zorder_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year"),
         "o_custkey", F.col("o_totalprice").cast("decimal(18,4)").alias("tp"))
-    root = tempfile.mkdtemp(prefix="txopt_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txopt_gate_")
     t = f"{root}/orders_opt"
     tx_write_parts(orders, t, "o_year", mode="overwrite")
     tx_optimize_parts(spark, t, "o_year", ["o_custkey", "tp"], n_files=8)
@@ -746,10 +736,6 @@ def incremental_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders — a green row proves incremental ≡ full recompute
     bit-exactly (sums ride DECIMAL, so order-independent).
     """
-    import atexit
-    import shutil
-    import tempfile
-
     from ..functions.text import md5_bucket
     from ..operators.incremental_agg import (
         build_sum_aggregate,
@@ -761,8 +747,7 @@ def incremental_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", F.year("o_orderdate").alias("o_year"),
         F.col("o_totalprice").cast("decimal(18,4)").alias("tp"))
     bkt = md5_bucket(F.col("o_orderkey").cast("string"), 7, salt="ia:")
-    root = tempfile.mkdtemp(prefix="txia_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txia_gate_")
     fact, aggt = f"{root}/fact_orders", f"{root}/agg_orders"
     tx_write_parts(orders.where(bkt != 0), fact, "o_year",
                    mode="overwrite")
@@ -905,17 +890,12 @@ def restore_orders_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     RESTORE ... TO VERSION AS OF (a metadata-only commit — the
     zero-copy property is pinned in tests/test_restore_clone.py).
     """
-    import atexit
-    import shutil
-    import tempfile
-
     from ..sources.txlog import tx_read, tx_restore, tx_write
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year"),
         F.col("o_totalprice").cast("decimal(18,4)").alias("tp"))
-    root = tempfile.mkdtemp(prefix="txrs_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txrs_gate_")
     t = f"{root}/orders_rs"
     tx_write(orders.filter(F.col("o_year") <= 1996), t, mode="append")
     c2 = tx_write(orders.filter(F.col("o_year") == 1997), t, mode="append")
@@ -958,17 +938,12 @@ def clone_orders_isolated(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot it pinned — writes to the source never leak into a
     clone. Format-level: Delta's CREATE TABLE ... SHALLOW CLONE.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     from ..sources.txlog import tx_clone, tx_read, tx_write
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year"),
         F.col("o_totalprice").cast("decimal(18,4)").alias("tp"))
-    root = tempfile.mkdtemp(prefix="txcl_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txcl_gate_")
     src, dst = f"{root}/orders_src", f"{root}/orders_clone"
     tx_write(orders.filter(F.col("o_year") <= 1997), src, mode="append")
     tx_clone(src, dst)
@@ -1014,10 +989,6 @@ def warehouse_consistent_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     show. This is the multi-table transaction layer single-table
     formats (Delta/Iceberg) lack; sources/txmulti.py.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     from ..sources.txlog import tx_write
     from ..sources.txmulti import (
         publish_manifest, read_consistent, snapshot_current,
@@ -1031,8 +1002,7 @@ def warehouse_consistent_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey",
         F.year("o_orderdate").alias("o_year"),
         F.col("o_totalprice").cast("decimal(18,4)").alias("tp"))
-    root = tempfile.mkdtemp(prefix="txwc_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txwc_gate_")
     # load 1: complete, manifested
     tx_write(cust, f"{root}/dim_customer", mode="overwrite")
     tx_write(orders.filter(F.col("o_year") <= 1997),
@@ -1086,18 +1056,13 @@ def mor_delete_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     MoR read must equal the WHERE-filtered source exactly.
     Reference parity: 02_OLTP_Screens.sql's DELETE screens, at a
     scale where rewriting the fact is not an option."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..sources.mor import tx_delete_where, tx_read_mor
     from ..sources.txlog import tx_write
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year"),
         F.col("o_totalprice").cast("decimal(18,4)").alias("tp"))
-    root = tempfile.mkdtemp(prefix="txmd_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txmd_gate_")
     t = f"{root}/orders_mor"
     tx_write(orders.filter(F.col("o_year") <= 1997), t, mode="append")
     tx_delete_where(spark, t, F.col("o_orderkey") % 7 == 0,
@@ -1137,17 +1102,12 @@ def stats_skipping_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-file stats skipping at the txlog's commit granularity — what
     keeps a "last 7 days" query on a 3-year fact from listing 1000
     dirs. The oracle is the plain filtered rollup."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..sources.skipping import tx_read_pruned, tx_write_stats
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year"),
         F.col("o_totalprice").cast("decimal(18,4)").alias("tp"))
-    root = tempfile.mkdtemp(prefix="txsk_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txsk_gate_")
     t = f"{root}/orders_sk"
     for y in [r["o_year"] for r in
               orders.select("o_year").distinct().collect()]:
@@ -1184,9 +1144,6 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract-pinned in tests/test_layout_and_skew.py). This is the
     decision that stops a daily 100 TB fact-fact join from moving
     100 TB across the network; SURVEY.md §4.1."""
-    import atexit
-    import shutil
-    import tempfile
     import uuid
 
     from ..sources import warehouse as WH
@@ -1196,8 +1153,7 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice").cast("decimal(18,4)").alias("price"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority")
-    root = tempfile.mkdtemp(prefix="bkt_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("bkt_gate_")
     lt, ot = WH.write_bucketed_pair(spark, li, orders, root,
                                     n_buckets=8,
                                     suffix=f"_g{uuid.uuid4().hex[:8]}")
@@ -1239,10 +1195,7 @@ def bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for an absent key returns nothing. The oracle is the plain
     IN-list filter; bloom false positives cost only I/O, never the
     hash."""
-    import atexit
     import functools
-    import shutil
-    import tempfile
 
     from ..sources.skipping import tx_read_point, tx_write_bloom
 
@@ -1250,8 +1203,7 @@ def bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey",
         F.year("o_orderdate").cast("int").alias("o_year"),
         F.col("o_totalprice").cast("decimal(18,4)").alias("tp"))
-    root = tempfile.mkdtemp(prefix="txbl_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txbl_gate_")
     t = f"{root}/orders_bl"
     for b in range(4):
         tx_write_bloom(orders.filter(F.col("o_orderkey") % 4 == b),
@@ -1349,10 +1301,6 @@ def incremental_minmax_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     those groups from the base (tier counts pytest-pinned in
     test_txlog_parts). Final aggregate ≡ the plain rollup over
     orders, doubles untouched."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators.incremental_agg import (
         build_minmax_aggregate,
         refresh_minmax_aggregate,
@@ -1366,8 +1314,7 @@ def incremental_minmax_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew = F.when(F.col("o_orderkey") % 13 == 0, F.col("tp") + F.lit(1e5)) \
             .when(F.col("o_orderkey") % 17 == 0, F.col("tp") - F.lit(1e5)) \
             .otherwise(F.col("tp"))
-    root = tempfile.mkdtemp(prefix="txmm_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txmm_gate_")
     fact, aggt = f"{root}/fact_orders", f"{root}/agg_orders"
     tx_write_parts(orders.withColumn("tp", skew), fact, "o_year",
                    mode="overwrite")
@@ -1411,10 +1358,6 @@ def parts_skipping_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata level, the quarter dirs inside the year by stats (the
     open-count contract is spy-pinned in tests/test_skipping.py).
     The oracle is the plain filtered rollup."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..sources.skipping import tx_read_parts_pruned, tx_write_parts_stats
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1422,8 +1365,7 @@ def parts_skipping_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("o_orderdate").cast("int").alias("o_year"),
         F.month("o_orderdate").cast("int").alias("o_month"),
         F.col("o_totalprice").cast("decimal(18,4)").alias("tp"))
-    root = tempfile.mkdtemp(prefix="txps_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txps_gate_")
     t = f"{root}/orders_ps"
     for q in range(4):
         tx_write_parts_stats(
@@ -1481,9 +1423,7 @@ def orders_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface the old generation with NULLs and aggregate across both.
     A green row certifies the schema-union read path bit-for-bit
     (rows, NULL fill, and the evolved column's values)."""
-    import atexit
     import shutil
-    import tempfile
 
     from ..sources.txlog import tx_read, tx_write
 
@@ -1491,8 +1431,7 @@ def orders_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", F.year("o_orderdate").alias("o_year"),
         F.col("o_totalprice").cast("decimal(18,4)").alias("tp"),
         "o_orderpriority")
-    root = tempfile.mkdtemp(prefix="txse_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txse_gate_")
     t = f"{root}/orders_se"
     tx_write(orders.filter(F.col("o_year") <= 1996)
              .select("o_orderkey", "tp"), t, mode="append")
@@ -1504,7 +1443,7 @@ def orders_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Eagerly pin the (few-row) aggregate off the temp table, then
     # reclaim it NOW: repeated bench iterations previously accumulated
     # one full table copy per call for the process lifetime (ADVICE
-    # r10; the atexit above stays as crash cover).
+    # r10; gate_root's exit cleanup stays as crash cover).
     agg = (
         tx_read(spark, t, merge_schema=True)
         .groupBy(F.coalesce("o_priority_class", F.lit("(pre-evolution)"))
@@ -1563,9 +1502,7 @@ def orders_maintenance_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     row certifies the cycle leaves the live generation bit-identical
     while the log shrinks to O(1) files and the superseded pre-merge
     partition dirs are reclaimed."""
-    import atexit
     import shutil
-    import tempfile
 
     from ..functions.text import md5_bucket
     from ..sources.txlog import (
@@ -1581,8 +1518,7 @@ def orders_maintenance_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year"),
         F.col("o_totalprice").alias("tp"))
-    root = tempfile.mkdtemp(prefix="txmc_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = gate_root("txmc_gate_")
     t = f"{root}/orders_mc"
     tx_write_parts(orders, t, "o_year", mode="overwrite")
 
@@ -1598,8 +1534,9 @@ def orders_maintenance_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Eager pin + immediate reclaim (ADVICE r10): this gate writes the
     # largest per-call footprint (full partitioned orders + merge
-    # rewrite), so deferring cleanup to atexit accumulated copies
-    # across bench iterations. atexit stays as crash cover.
+    # rewrite), so deferring cleanup to exit accumulated copies
+    # across bench iterations. gate_root's exit cleanup stays as
+    # crash cover.
     agg = (
         tx_read_parts(spark, t)
         .groupBy("o_year")

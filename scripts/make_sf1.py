@@ -20,7 +20,8 @@ changes, deliberately:
   original rows, so query SELECTIVITY drops 10x — exactly what a
   bigger corpus does to a fixed query.
 
-Output is a TIMING input only (bench.py via SPARK_GRAFT_SF_DIR); the
+Output is a TIMING input only (bench.py via SPARK_GRAFT_SF_DIR; add
+SPARK_GRAFT_BENCH_BUDGET_SEC=0 to time the headline items only); the
 correctness oracle never runs on it. Default destination /tmp/sf1
 (~10x sf0.1 on disk — regenerate on demand, never committed).
 

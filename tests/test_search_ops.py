@@ -8,6 +8,8 @@ rules, and the scale contracts (vocabulary join not force-broadcast).
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -105,6 +107,17 @@ def test_assign_ties_break_to_lowest_cluster(spark):
         "cluster_id int, centroid array<float>")
     row = clustering.assign_clusters(emb, cent).collect()[0]
     assert row["cluster_id"] == 2 and row["dist"] == 1.0
+
+
+def test_assign_clusters_shuffles_nothing(spark, sf_dir):
+    """The argmin is map-side over the broadcast centroid row, so the
+    plan holds no shuffle exchange, of the corpus or of the centroid
+    fold; the only exchange is the broadcast."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    plan = (clustering.assign_clusters(emb, _centroids(emb))
+            ._jdf.queryExecution().executedPlan().toString())
+    assert "BroadcastExchange" in plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
 
 
 def test_kmeans_fit_rejects_fewer_vectors_than_k(spark):
