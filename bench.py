@@ -205,6 +205,38 @@ def _pipeline_items(spark, sf_dir: str, counts: dict) -> list[Item]:
     ]
 
 
+def spread(by_name: dict[str, list[float]]) -> dict[str, list[float]]:
+    return {n: [round(min(v), 4), round(lower_median(v), 4),
+                round(max(v), 4)] for n, v in by_name.items() if len(v) > 1}
+
+
+def artifact(samples: dict[str, list[float]],
+             section_samples: dict[str, list[float]], **run) -> dict:
+    """The ``BENCH_FULL.json`` payload. Registry timings and spreads go
+    under ``queries`` and ``stats``; the library and pipeline sections'
+    go under ``sections``, because the library section's report names
+    (``lqy_query1..3``) are registry names too. ``run`` adds the run's
+    ``counts``, ``errors``, ``skipped``, ``shed``, ``host`` and ``sf``."""
+    timings = {n: round(lower_median(v), 4) for n, v in samples.items()}
+    extra = {n: round(lower_median(v), 4)
+             for n, v in section_samples.items()}
+    if "library_generate" in extra and "library_etl" in extra:
+        extra["library_initial_load"] = round(
+            extra["library_generate"] + extra["library_etl"], 4)
+    return {
+        "metric": "headline_queries_total",
+        "value": round(sum(t for n, t in timings.items()
+                           if QUERIES[n].bench), 4),
+        "unit": "sec",
+        "queries": timings,
+        "stats": spread(samples),
+        "sections": {"queries": extra, "stats": spread(section_samples)},
+        "all_queries_total": round(sum(timings.values()), 4),
+        "n_queries": len(timings),
+        **run,
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -227,20 +259,6 @@ def main() -> None:
         budget - (time.perf_counter() - t_begin))
     errors.update({f"section {n}": e for n, e in section_errors.items()})
 
-    def spread(by_name: dict[str, list[float]]) -> dict[str, list[float]]:
-        return {n: [round(min(v), 4), round(lower_median(v), 4),
-                    round(max(v), 4)] for n, v in by_name.items()
-                if len(v) > 1}
-
-    stats = {**spread(samples), **spread(section_samples)}
-    timings = {n: round(lower_median(v), 4) for n, v in samples.items()}
-    extra = {n: round(lower_median(v), 4)
-             for n, v in section_samples.items()}
-    if "library_generate" in extra and "library_etl" in extra:
-        extra["library_initial_load"] = round(
-            extra["library_generate"] + extra["library_etl"], 4)
-    headline = round(sum(t for n, t in timings.items() if QUERIES[n].bench),
-                     4)
     # Breadth passes the budget cut before every query had its sample.
     breadth = [s.name for s in specs
                if not s.bench and s.name not in errors]
@@ -251,22 +269,8 @@ def main() -> None:
             "load1_at_exit": _load1(),
             "wall_sec": round(time.perf_counter() - t_begin, 1),
             **speed}
-    all_timings = {**timings, **extra}
-    full = {
-        "metric": "headline_queries_total",
-        "value": headline,
-        "unit": "sec",
-        "queries": all_timings,
-        "counts": counts,
-        "stats": stats,
-        "all_queries_total": round(sum(timings.values()), 4),
-        "n_queries": len(timings),
-        "skipped": skipped,
-        "shed": shed,
-        "errors": errors,
-        "host": host,
-        "sf": float(sf),
-    }
+    full = artifact(samples, section_samples, counts=counts, errors=errors,
+                    skipped=skipped, shed=shed, host=host, sf=float(sf))
     try:
         # A smoke run at another scale must not overwrite the sf0.1
         # artifact.
@@ -278,15 +282,16 @@ def main() -> None:
     except OSError:
         pass
 
-    slim_queries = {**{n: t for n, t in timings.items() if QUERIES[n].bench},
-                    **extra}
+    slim_queries = {**{n: t for n, t in full["queries"].items()
+                       if QUERIES[n].bench},
+                    **full["sections"]["queries"]}
     print(json.dumps({
         "metric": "headline_queries_total",
-        "value": headline,
+        "value": full["value"],
         "unit": "sec",
         "queries": slim_queries,
         "all_queries_total": full["all_queries_total"],
-        "n_queries": len(timings),
+        "n_queries": full["n_queries"],
         "n_skipped": len(skipped),
         "n_errors": len(errors),
         "shed": shed,

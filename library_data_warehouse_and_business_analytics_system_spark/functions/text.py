@@ -1,5 +1,5 @@
 """Text-analysis primitives for training-data pipelines: tokenizing,
-language-ID scoring, quality metrics, shingling, fingerprints. Pure
+language-ID scoring, quality metrics, shingling, content hashing. Pure
 Column expressions (split/regexp/HOFs) — the hot path never leaves the
 JVM.
 """
@@ -62,12 +62,6 @@ def predict_lang(text: Column) -> Column:
     return F.coalesce(best.lang, F.lit("und"))
 
 
-def punct_ratio(text: Column) -> Column:
-    non_ws = F.length(F.regexp_replace(text, r"\s", ""))
-    punct = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", ""))
-    return punct / F.nullif(non_ws.cast("double"), F.lit(0.0))
-
-
 def mean_token_len(text: Column) -> Column:
     t = tokens(text)
     return (F.aggregate(F.transform(t, lambda x: F.length(x).cast("double")),
@@ -115,21 +109,6 @@ def shingle_hashes_from_tokens(tok: Column, n: int = 5) -> Column:
     ``shingles_from_tokens``)."""
     return F.array_distinct(
         F.transform(shingles_from_tokens(tok, n), lambda s: F.xxhash64(s)))
-
-
-def shingle_hashes(text: Column, n: int = 5) -> Column:
-    """Distinct 64-bit shingle hashes (xxhash64)."""
-    return shingle_hashes_from_tokens(tokens(text), n)
-
-
-def doc_fingerprint(text: Column, k: int = 8) -> Column:
-    """Cheap deterministic document fingerprint: md5 over the first-k
-    tokens, last-k tokens and the token count — robust to mid-document
-    edits, SQL-expressible for oracle checks."""
-    t = tokens(text)
-    head = F.array_join(F.slice(t, 1, k), " ")
-    tail = F.array_join(F.slice(t, -k, k), " ")
-    return F.md5(F.concat_ws("|", head, tail, F.size(t).cast("string")))
 
 
 # ---------------------------------------------------------------------------

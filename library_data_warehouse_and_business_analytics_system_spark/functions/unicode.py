@@ -20,8 +20,6 @@ from __future__ import annotations
 import unicodedata
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
@@ -48,7 +46,3 @@ def strip_accents(s: pd.Series) -> pd.Series:
                        if not unicodedata.combining(ch))
     return s.map(strip)
 
-
-def normalized_text(text: Column) -> Column:
-    """NFC over a column — alias so call sites read declaratively."""
-    return nfc(text)

@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.vectors import cosine_from_norms, dot, l2_norm_sq
+from ..session import checkpoint
 from ..sources.txlog import (
     tx_exists,
     tx_latest_id,
@@ -351,8 +352,9 @@ def ann_index_upsert(spark: SparkSession, root: str, new_vectors: DataFrame,
             # pin the moved set (bounded by |delta|): it drives the
             # touched-partition set, the eviction anti-join, and must
             # not be recomputed against post-commit state
-            moved = moved.select("id", "stored_cell").localCheckpoint()
-            if not moved.limit(1).count():
+            moved, got = checkpoint(moved.select("id", "stored_cell"),
+                                    n=F.count(F.lit(1)))
+            if not got["n"]:
                 moved = None
         else:
             sample = moved.limit(5).collect()

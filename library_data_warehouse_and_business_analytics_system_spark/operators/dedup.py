@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import shingle_hashes_from_tokens, tokens
+from ..session import checkpoint
 
 
 def _shingle_sets(df: DataFrame, text_col: str, id_col: str,
@@ -556,7 +557,7 @@ def connected_components(pairs: DataFrame, universe: DataFrame,
     Iterative min-label propagation: each round every node takes the
     min of its own label and its neighbors' labels; converged when no
     label changes (≤ graph-diameter rounds — near-dup clusters are
-    shallow, so 2-3 rounds in practice). Each round localCheckpoints
+    shallow, so 2-3 rounds in practice). Each round checkpoints
     the labels so the plan stays O(1) deep instead of growing with
     iterations — the standard Spark shape for iterative algorithms
     (same reason GraphX/GraphFrames checkpoint between supersteps).
@@ -564,26 +565,20 @@ def connected_components(pairs: DataFrame, universe: DataFrame,
     # Materialize the edge list once — every round joins it, and an
     # expensive upstream pair-generation lineage (LSH, shingling) must
     # not be re-executed per iteration. Repartitioned by src and
-    # checkpointed under no_aqe (r14, guide §2.4) so the preserved
-    # hashpartitioning lets EVERY round's propagation join skip the
-    # edge-side exchange+sort — the edge set is shuffled once total,
-    # not once per round. Same treatment for the label frames: the
-    # per-round checkpoint comes out of a join keyed by id, so keeping
-    # its hash(id) partitioning lets the next round's left join skip
-    # the label-side exchange. Placement only; label values unchanged.
-    from ..session import no_aqe
-
-    spark = pairs.sparkSession
-    with no_aqe(spark):
-        edges = (
-            pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            .unionByName(
-                pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-            .repartition("src")
-        ).localCheckpoint()
-        labels = (universe.select(F.col(id_col).alias("id"),
-                                  F.col(id_col).alias("label"))
-                  .repartition("id").localCheckpoint())
+    # checkpointed with its hashpartitioning kept (r14, guide §2.4), so
+    # EVERY round's propagation join skips the edge-side exchange+sort.
+    # Same for the labels: each round's checkpoint comes out of a join
+    # keyed by id, so the next round's left join skips the label-side
+    # exchange. The job that pins a round's labels also answers whether
+    # any changed.
+    edges, _ = checkpoint(
+        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        .unionByName(
+            pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+        .repartition("src"))
+    labels, _ = checkpoint(universe.select(
+        F.col(id_col).alias("id"), F.col(id_col).alias("label"))
+        .repartition("id"))
     converged = False
     for _ in range(max_iterations):
         nbr_min = (
@@ -591,18 +586,16 @@ def connected_components(pairs: DataFrame, universe: DataFrame,
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("label").alias("nbr_label"))
         )
-        with no_aqe(spark):
-            updated = (
-                labels.join(nbr_min, "id", "left")
-                .select("id",
-                        F.least("label", F.coalesce("nbr_label", "label"))
-                        .alias("label"),
-                        (F.coalesce("nbr_label", "label") < F.col("label"))
-                        .alias("_changed"))
-            ).localCheckpoint()
-        changed = updated.filter(F.col("_changed")).limit(1).count()
+        updated, got = checkpoint(
+            labels.join(nbr_min, "id", "left")
+            .select("id",
+                    F.least("label", F.coalesce("nbr_label", "label"))
+                    .alias("label"),
+                    (F.coalesce("nbr_label", "label") < F.col("label"))
+                    .alias("_changed")),
+            changed=F.bool_or("_changed"))
         labels = updated.drop("_changed")
-        if changed == 0:
+        if not got["changed"]:  # NULL over no labels: nothing changed
             converged = True
             break
     if not converged:

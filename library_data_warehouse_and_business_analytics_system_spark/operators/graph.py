@@ -21,12 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import no_aqe as _no_aqe
+from ..session import checkpoint
 
 
 def pagerank(edges: DataFrame, iters: int = 2, damping: float = 0.85,
-             src: str = "src", dst: str = "dst",
-             exact_fold: bool = True) -> DataFrame:
+             src: str = "src", dst: str = "dst") -> DataFrame:
     """PageRank over a directed edge list (one row per distinct edge).
 
     Returns (id, pr) for every node appearing as a source or
@@ -37,16 +36,9 @@ def pagerank(edges: DataFrame, iters: int = 2, damping: float = 0.85,
     one grouped fold, so cost is O(iters × |E|) with no growth in
     state.
 
-    ``exact_fold=True`` (the oracle-gating mode) materializes each
-    destination's contributions as a sorted array before summing —
-    bit-reproducible, but the array is in-degree-sized, and on a
-    power-law web graph a hub's in-degree is millions: at 100 TB
-    that array OOMs the reducer. ``exact_fold=False`` is the scale
-    path: a plain two-phase SUM (map-side partial aggregation, state
-    one double per node) whose only cost is addition-order
-    nondeterminism in the last ulp — invisible at any tolerance a
-    ranking consumer uses. The equivalence of the two modes is
-    pinned in tests/test_search_ops.py.
+    Each destination's contributions are summed as a sorted array, so
+    the fold's array is sized by the node's in-degree: a hub with
+    millions of in-edges holds them all in one reducer row.
     """
     # Materialize the (possibly expensive) distinct edge derivation
     # ONCE, with the out-degree already folded in: without this,
@@ -62,26 +54,22 @@ def pagerank(edges: DataFrame, iters: int = 2, damping: float = 0.85,
     # pr / odeg divides the same doubles — ranks are bit-identical.
     from pyspark.sql import Window
 
-    # Both checkpoints materialize under _no_aqe so their
-    # hashpartitioning survives into the LogicalRDD leaf (r14, guide
-    # §2.4): ew stays hash(src)-partitioned and sorted — the exact
-    # distribution the per-iteration contribution join requires, so
-    # the edge set is shuffled ONCE total instead of once per
-    # iteration — and nodes stays hash(id)-partitioned for the
-    # per-iteration left join. Row VALUES are unchanged (only their
-    # partition placement is pinned), and the exact_fold sort makes
-    # rank doubles placement-independent anyway.
-    spark = edges.sparkSession
-    with _no_aqe(spark):
-        ew = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-              .distinct()
-              .withColumn("odeg",
-                          F.count(F.lit(1)).over(Window.partitionBy("src")))
-              .localCheckpoint())
-        nodes = (ew.select(F.col("src").alias("id"))
-                 .union(ew.select(F.col("dst").alias("id")))
-                 .distinct().localCheckpoint())
-    n_nodes = nodes.count()  # scalar: fixes N for the base term
+    # The checkpoints keep their hashpartitioning: ew stays
+    # hash(src)-partitioned and sorted — the exact distribution the
+    # per-iteration contribution join requires, so the edge set is
+    # shuffled ONCE total instead of once per iteration — and nodes and
+    # each iteration's ranks stay hash(id)-partitioned for the next
+    # left join. The sorted fold makes rank doubles
+    # placement-independent.
+    ew, _ = checkpoint(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .distinct()
+        .withColumn("odeg", F.count(F.lit(1)).over(Window.partitionBy("src"))))
+    nodes, got = checkpoint(
+        ew.select(F.col("src").alias("id"))
+        .union(ew.select(F.col("dst").alias("id"))).distinct(),
+        n=F.count(F.lit(1)))
+    n_nodes = got["n"]  # fixes N for the base term
 
     base = (1.0 - damping) / n_nodes
     pr = nodes.select("id", (F.lit(1.0) / F.lit(n_nodes)).alias("pr"))
@@ -91,26 +79,21 @@ def pagerank(edges: DataFrame, iters: int = 2, damping: float = 0.85,
             .select(F.col("dst").alias("id"), "src",
                     (F.col("pr") / F.col("odeg")).alias("c"))
         )
-        if exact_fold:
-            summed = (
-                contrib.groupBy("id")
-                .agg(F.array_sort(F.collect_list(F.struct("src", "c")))
-                     .alias("cs"))
-                .select("id",
-                        F.aggregate(F.col("cs"), F.lit(0.0),
-                                    lambda acc, s: acc + s["c"])
-                        .alias("s"))
-            )
-        else:
-            summed = contrib.groupBy("id").agg(F.sum("c").alias("s"))
-        pr = (
+        summed = (
+            contrib.groupBy("id")
+            .agg(F.array_sort(F.collect_list(F.struct("src", "c")))
+                 .alias("cs"))
+            .select("id",
+                    F.aggregate(F.col("cs"), F.lit(0.0),
+                                lambda acc, s: acc + s["c"])
+                    .alias("s"))
+        )
+        pr, _ = checkpoint(  # bound lineage: O(1) plan per iteration
             nodes.join(summed, "id", "left")
             .select("id",
                     (F.lit(base)
                      + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-                     ).alias("pr"))
-            .localCheckpoint()  # bound lineage: O(1) plan per iteration
-        )
+                     ).alias("pr")))
     return pr
 
 

@@ -12,8 +12,8 @@ Oracle warehouse reaches for it the moment a dimension is a tree
 Spark-first shape: breadth-first frontier expansion — one equi-join
 per LEVEL, each shuffling only the frontier and the children that
 attach to it (never the whole edge set per row). Depth-D traversal
-costs D joins; each level is localCheckpoint()ed so lineage stays
-flat and the per-level emptiness check doesn't recompute the chain.
+costs D joins; each level's checkpoint keeps lineage flat, and its job
+also counts the level's rows, which is the emptiness check.
 This is the same Pregel-on-DataFrames posture as
 ``operators/graph.py``'s PageRank. A ``max_depth`` guard bounds the
 traversal: a deeper-than-expected chain raises instead of running
@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import checkpoint
 
 
 def connect_by_prior(nodes: DataFrame, key: str, parent: str,
@@ -46,12 +48,11 @@ def connect_by_prior(nodes: DataFrame, key: str, parent: str,
     raise the limit explicitly for the latter).
     """
     keyc = F.col(key)
-    frontier = (nodes.filter(F.col(parent).isNull())
-                .withColumn("lvl", F.lit(0))
-                .withColumn("root", keyc)
-                .withColumn("path",
-                            F.concat(F.lit(path_sep), keyc.cast("string")))
-                .localCheckpoint(eager=True))
+    frontier, _ = checkpoint(
+        nodes.filter(F.col(parent).isNull())
+        .withColumn("lvl", F.lit(0))
+        .withColumn("root", keyc)
+        .withColumn("path", F.concat(F.lit(path_sep), keyc.cast("string"))))
     levels = [frontier]
     children = nodes.filter(F.col(parent).isNotNull())
     for _ in range(max_depth):
@@ -60,15 +61,15 @@ def connect_by_prior(nodes: DataFrame, key: str, parent: str,
             (F.col("lvl") + 1).alias("_lvl"),
             F.col("root").alias("_root"),
             F.col("path").alias("_path"))
-        frontier = (
+        frontier, got = checkpoint(
             children.join(parent_side, F.col(parent) == F.col("_pk"))
             .withColumn("lvl", F.col("_lvl"))
             .withColumn("root", F.col("_root"))
             .withColumn("path", F.concat(F.col("_path"), F.lit(path_sep),
                                          keyc.cast("string")))
-            .drop("_pk", "_lvl", "_root", "_path")
-            .localCheckpoint(eager=True))
-        if frontier.isEmpty():
+            .drop("_pk", "_lvl", "_root", "_path"),
+            n=F.count(F.lit(1)))
+        if not got["n"]:
             return _union_all(levels)
         levels.append(frontier)
     raise ValueError(

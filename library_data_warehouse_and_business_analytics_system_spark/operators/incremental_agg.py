@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
 from ..sources.txlog import (tx_diff_parts, tx_latest_id, tx_read,
                              tx_read_parts, tx_write)
 
@@ -175,9 +176,10 @@ def refresh_minmax_aggregate(spark: SparkSession, fact_table: str,
     fast = (joined.filter(~needs_recompute).select(*fast_cols)
             .filter(F.col("n_rows") > 0))
 
-    affected = joined.filter(needs_recompute).select(*group_cols) \
-        .localCheckpoint(eager=True)
-    n_recomputed = affected.count()
+    affected, got = checkpoint(
+        joined.filter(needs_recompute).select(*group_cols),
+        n=F.count(F.lit(1)))
+    n_recomputed = got["n"]
     if n_recomputed:
         base = tx_read_parts(spark, fact_table, as_of=version)
         recomputed = _minmax_rollup(

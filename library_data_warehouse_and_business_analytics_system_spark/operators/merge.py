@@ -13,8 +13,6 @@ keys — the same physical shape Delta's merge executes.
 
 from __future__ import annotations
 
-from collections.abc import Mapping
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -118,29 +116,3 @@ def insert_not_exists(target: DataFrame, source: DataFrame,
     deterministically (first by key order) to honor the target's PK."""
     fresh = source.dropDuplicates(keys).join(target, keys, "left_anti")
     return target.unionByName(fresh.select(target.columns))
-
-
-def merge_aggregate(target: DataFrame, source: DataFrame, keys: list[str],
-                    set_map: Mapping[str, Column]) -> DataFrame:
-    """MERGE with custom UPDATE expressions referencing t.* and s.*
-    (e.g. ``fineAmount = s.fineAmount`` guarded by status —
-    08_InsertFines.sql:46-61). ``set_map`` maps column → expression
-    over the joined ``t``/``s`` aliases; unmatched source rows insert."""
-    t = target.withColumn("__t", F.lit(True)).alias("t")
-    s = source.alias("s")
-    joined = t.join(s, keys, "full_outer")
-    t_exists = F.col("t.__t").isNotNull()
-    out_cols = []
-    for c in target.columns:
-        if c in keys:
-            out_cols.append(F.coalesce(F.col(f"t.{c}"), F.col(f"s.{c}")).alias(c))
-        elif c in set_map:
-            expr = set_map[c]
-            src = F.col(f"s.{c}") if c in source.columns else F.lit(None)
-            out_cols.append(
-                F.when(t_exists, expr).otherwise(src).alias(c)
-            )
-        else:
-            src = F.col(f"s.{c}") if c in source.columns else F.lit(None)
-            out_cols.append(F.when(t_exists, F.col(f"t.{c}")).otherwise(src).alias(c))
-    return joined.select(*out_cols)

@@ -52,21 +52,6 @@ def _seeded_planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def random_hyperplane_buckets(df: DataFrame, vec_col: str, dim: int,
-                              n_planes: int = 12, seed: int = 42) -> DataFrame:
-    """Append an LSH ``bucket`` column: the n-bit sign pattern of
-    seeded Gaussian projections. Cosine-close vectors land in the same
-    bucket with high probability."""
-    planes = _seeded_planes(dim, n_planes, seed)
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(x) for x in p])
-        bit = F.when(dot(F.col(vec_col), plane) >= 0,
-                     F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0))
-        bucket = bucket.bitwiseXOR(bit)
-    return df.withColumn("bucket", bucket)
-
-
 def lsh_topk(corpus: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
              dim: int, k: int = 10, n_planes: int = 6, seed: int = 42,
              n_tables: int = 8, max_candidates: int | None = None) -> DataFrame:

@@ -35,34 +35,28 @@ def curate_corpus(docs: DataFrame, *, id_col: str = "doc_id",
                   repetition_max: float = 0.5,
                   test_bucket: int = 9, n_buckets: int = 10,
                   contamination_n: int = 5,
-                  chunk_size: int = 64,
-                  materialize: bool = True) -> dict[str, DataFrame]:
+                  chunk_size: int = 64) -> dict[str, DataFrame]:
     """Returns the intermediate frames keyed by stage name — callers
     materialize what they need (`train_chunks` is the product;
     `test`, `dropped_*` frames are the audit trail).
 
-    ``materialize`` (default on) eagerly ``localCheckpoint``s the two
-    reuse boundaries. This matters twice over: (1) the scrub regex
-    chain inlined into the pair machinery's shingle lambdas
-    re-evaluates per reference — pair generation alone measured 27.2s
-    lazy vs 7.3s materialized at 5k docs; (2) four downstream
-    branches (train, test, and the contamination join's two gram
-    sides) would each re-derive the dedup subtree. A lazy
-    ``.cache()`` does NOT fix (1) — branches inside one action can't
-    reuse a cache still being computed (measured 41.7s cached vs
-    32.3s uncached vs ~12s checkpointed end-to-end). Pass False when
-    the caller persists stage outputs to tables between steps (the
-    100 TB shape, where these boundaries are durable writes anyway)."""
+    The two reuse boundaries are eager ``localCheckpoint``s, for two
+    reasons: (1) the scrub regex chain inlined into the pair
+    machinery's shingle lambdas re-evaluates per reference — pair
+    generation alone measured 27.2s lazy vs 7.3s materialized at 5k
+    docs; (2) four downstream branches (train, test, and the
+    contamination join's two gram sides) would each re-derive the
+    dedup subtree. A lazy ``.cache()`` does NOT fix (1) — branches
+    inside one action can't reuse a cache still being computed
+    (measured 41.7s cached vs 32.3s uncached vs ~12s checkpointed
+    end-to-end)."""
     scrubbed = docs.withColumn("text", TX.scrub_pii(F.col("text")))
 
-    exact_kept = dedup.exact_dedup(scrubbed, "text", id_col)
-    if materialize:
-        exact_kept = exact_kept.localCheckpoint()
+    exact_kept = dedup.exact_dedup(scrubbed, "text", id_col).localCheckpoint()
     pairs = dedup.ngram_jaccard_pairs_prefix(
         exact_kept, "text", id_col, threshold=jaccard_threshold)
-    near_kept = dedup.keep_canonical(exact_kept, pairs, id_col)
-    if materialize:
-        near_kept = near_kept.localCheckpoint()
+    near_kept = dedup.keep_canonical(exact_kept, pairs, id_col) \
+        .localCheckpoint()
 
     bucket = TX.md5_bucket(F.col("text"), n_buckets)
     with_bucket = near_kept.withColumn("_bucket", bucket)
@@ -138,8 +132,7 @@ def curate_corpus_durable(spark, docs: DataFrame, root: str, *,
                           stop_after: str | None = None) -> dict[str, str]:
     """The 100 TB shape of :func:`curate_corpus`: every reuse boundary
     is a DURABLE txlog table under ``root`` instead of a
-    ``localCheckpoint`` (the in-memory variant's documented
-    ``materialize=False`` contract, made real — VERDICT r5 item 4).
+    ``localCheckpoint``, so a stage's output survives the driver.
 
     Restartability: each stage publishes atomically via ``tx_write``
     and is SKIPPED on re-run when its table already has a commit

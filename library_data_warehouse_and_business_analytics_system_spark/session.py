@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 #: Configs that matter at 100 TB just as much as at sf0.01.
 ENGINE_CONFS: dict[str, str] = {
@@ -90,6 +90,21 @@ def no_aqe(spark: SparkSession):
             _aqe_depth -= 1
             if _aqe_depth == 0:
                 spark.conf.set(_AQE, _aqe_saved)
+
+
+def checkpoint(df: DataFrame, **probes: Column) -> tuple[DataFrame, dict]:
+    """Pin ``df`` with one eager ``localCheckpoint`` under
+    :func:`no_aqe`, so its hash partitioning survives into the next
+    keyed join, and return it with the value of each ``probes``
+    aggregate, observed by that same job. Over no rows a probe gives
+    its aggregate's empty value: 0 for ``count``, ``[]`` for
+    ``collect_set``, None for ``bool_or``."""
+    if probes:
+        obs = Observation()
+        df = df.observe(obs, *[c.alias(n) for n, c in probes.items()])
+    with no_aqe(df.sparkSession):
+        pinned = df.localCheckpoint()
+    return pinned, obs.get if probes else {}
 
 
 def get_spark(app_name: str = "library-dwh-spark", master: str | None = None,

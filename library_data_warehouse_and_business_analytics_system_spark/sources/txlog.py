@@ -63,8 +63,11 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, \
     StructType
+
+from ..session import checkpoint
 
 _LOG = "_txlog"
 _DATA = "data"
@@ -872,8 +875,9 @@ def tx_merge_parts(spark: SparkSession, table: str, source: DataFrame,
     ``source.limit(0)`` as ``current``.
 
     ``source`` is evaluated once: past the idempotence and conflict
-    pre-checks it is materialised with ``localCheckpoint``, and both
-    the touched-partition scan and the staged write read that copy.
+    pre-checks one ``session.checkpoint`` job materialises it and
+    collects its touched partition values, and the staged write reads
+    that copy.
 
     ``txn_id`` makes the merge IDEMPOTENT under redelivery (the
     ``tx_write`` txnAppId pattern): a micro-batch replayed after a
@@ -935,10 +939,11 @@ def tx_merge_parts(spark: SparkSession, table: str, source: DataFrame,
                 f"not the expected snapshot {expect_latest}")
     base = tx_latest_id(table) if expect_latest is None else expect_latest
     state = _visible_parts(table, as_of=base)
-    source = source.localCheckpoint()
-    touched = sorted({
-        str(r[0]) for r in
-        source.select(source[part_col].cast("string")).distinct().collect()})
+    # A NULL partition value is not in ``touched`` (collect_set skips
+    # it); the staged write below rejects it.
+    source, got = checkpoint(
+        source, parts=F.collect_set(F.col(part_col).cast("string")))
+    touched = sorted(got["parts"])
     existing_dirs = [d for v in touched for d in state.get(v, [])]
     if existing_dirs:
         current = _read_dirs(spark, table, existing_dirs)
@@ -1023,8 +1028,6 @@ def tx_diff_parts(spark: SparkSession, table: str, v_from: int,
     diff cost scales with the CHANGED data, not the table. Delta's
     CDF reads change files; this derives the same feed from dir
     identity alone."""
-    from pyspark.sql import functions as F
-
     pa = _visible_parts(table, as_of=v_from)
     pb = _visible_parts(table, as_of=v_to)
     changed = sorted(v for v in set(pa) | set(pb)

@@ -115,3 +115,19 @@ def test_estimate_is_the_lower_median():
     assert samples == {"q1": [4.0, 1.0, 9.0], "q2": [4.0, 1.0]}
     assert bench.lower_median(samples["q1"]) == 4.0
     assert bench.lower_median(samples["q2"]) == 1.0
+
+
+def test_artifact_keeps_section_and_registry_timings_of_one_name():
+    """``lqy_query1`` is both a registry query and a library-section
+    report: the full artifact keeps both timings and both spreads."""
+    assert not QUERIES["lqy_query1"].bench
+    full = bench.artifact({"lqy_query1": [3.0, 1.0, 2.0]},
+                          {"lqy_query1": [7.0, 5.0, 6.0],
+                           "library_generate": [1.0], "library_etl": [2.0]})
+    assert full["queries"] == {"lqy_query1": 2.0}
+    assert full["stats"] == {"lqy_query1": [1.0, 2.0, 3.0]}
+    assert full["sections"]["queries"] == {
+        "lqy_query1": 6.0, "library_generate": 1.0, "library_etl": 2.0,
+        "library_initial_load": 3.0}
+    assert full["sections"]["stats"] == {"lqy_query1": [5.0, 6.0, 7.0]}
+    assert full["all_queries_total"] == 2.0 and full["value"] == 0.0

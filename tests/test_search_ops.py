@@ -366,23 +366,6 @@ def test_pagerank_matches_numpy_reference(spark):
     assert got[4] == got[5] == min(got.values())
 
 
-def test_pagerank_scale_sum_matches_exact_fold(spark):
-    """The plain-SUM scale path (what a power-law graph needs — no
-    in-degree-sized arrays) must agree with the sorted-fold gating
-    path to float tolerance."""
-    pairs = [(s, d) for s in range(1, 30) for d in range(1, 30)
-             if s != d and (s + d) % 3 != 0]
-    exact = {r["id"]: r["pr"]
-             for r in graph.pagerank(_edges(spark, pairs), iters=3,
-                                     exact_fold=True).collect()}
-    fast = {r["id"]: r["pr"]
-            for r in graph.pagerank(_edges(spark, pairs), iters=3,
-                                    exact_fold=False).collect()}
-    assert exact.keys() == fast.keys()
-    for k in exact:
-        assert abs(exact[k] - fast[k]) < 1e-12
-
-
 def test_pagerank_symmetric_cycle_is_uniform(spark):
     pairs = [(1, 2), (2, 3), (3, 1)]
     got = {r["id"]: r["pr"]

@@ -356,6 +356,13 @@ def test_null_partition_value_rejected(spark, tmp_path):
         tx_write_parts(df, t, "o_year")
     # the staged dir is an invisible orphan — nothing committed
     assert not txlog.tx_exists(t)
+    # a merge source's NULL partition value is not among the touched
+    # partitions, but its staged write still rejects it
+    v = tx_write_parts(_orders(spark, [(2, 2020, 2.0)]), t, "o_year")
+    src = _orders(spark, [(1, None, 1.0), (2, 2020, 3.0)])
+    with pytest.raises(ValueError, match="non-null"):
+        tx_merge_parts(spark, t, src, keys=["o_orderkey"], part_col="o_year")
+    assert txlog.tx_latest_id(t) == v
 
 
 def test_diff_parts_change_feed_reads_only_changed_partitions(spark,
